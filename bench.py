@@ -60,16 +60,9 @@ def bench_pipeline(spark, sf_dir: str, replicate: int) -> tuple[dict, int]:
     n_docs = n_base * max(replicate, 1)
 
     src = pages_scaled(spark, sf_dir, replicate).drop("html")
-    # engine: 'native' — re-measured r4 fastest end-to-end at local[32]
-    # (0.71 s vs pandas 1.20 at 500k docs; 1.79 vs 2.09 at 2M), and the
-    # only engine with zero Python workers, so throughput and the --dual
-    # scaling runs now use the same code path (pandas-UDF workers are
-    # EXTRA processes outside the local[N] thread budget and used to
-    # distort the low-parallelism baseline).
-    engine = os.environ.get("SPARKOTEL_BENCH_ENGINE", "native")
-    routed = assign_routes(
-        enrich_stage(spark, parse_stage(src, engine=engine)), ROUTES, "other"
-    )
+    # the parse stage runs zero Python workers, so throughput and the
+    # --dual scaling runs share one all-JVM code path
+    routed = assign_routes(enrich_stage(spark, parse_stage(src)), ROUTES, "other")
 
     best = None
     for _ in range(4):
@@ -209,10 +202,6 @@ def run_dual() -> None:
         # scaling runs need enough work that fixed job overheads don't
         # mask parallelism: 4x the default input unless caller pinned it
         env.setdefault("SPARKOTEL_BENCH_REPLICATE", "400")
-        # all-JVM engine so the local[N] thread budget bounds ALL the
-        # work (python UDF workers are extra processes that would let
-        # the low level borrow idle cores — see bench_pipeline note)
-        env.setdefault("SPARKOTEL_BENCH_ENGINE", "native")
         out = subprocess.run(
             [sys.executable, os.path.abspath(__file__), "--single", "--pipeline-only"],
             env=env,
@@ -269,11 +258,9 @@ def run_dual() -> None:
             "zero framework overhead).  Per-level\n"
             "minimum over 5 interleaved rounds x best-of-3 phases, to cut\n"
             "through this shared sandbox's 3-15x co-tenant variance.\n\n"
-            "Scaling runs use the all-JVM native regex engine: pandas-UDF\n"
-            "python workers are separate processes OUTSIDE the local[N]\n"
-            "task-thread budget, so with the Arrow engine the local[2] run\n"
-            "borrows idle host cores and the measured ratio understates\n"
-            "true scaling (0.69-0.77 apparent vs 0.87 honest).  A python\n"
+            "The parse stage is all-JVM (native regex, no python UDF\n"
+            "workers), so the local[N] task-thread budget bounds all the\n"
+            "work.  A python\n"
             "burn test measures per-core throughput flat from 2 to 8 busy\n"
             "cores (80.9M vs 80.3M ops/core), so the JVM-engine ratio is a\n"
             "true parallelism measurement, not a frequency artifact.\n\n"

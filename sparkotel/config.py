@@ -24,7 +24,6 @@ class ParseSpec:
     pattern: str
     groups: list[str]
     on_error: str = "send"
-    engine: str = "native"
     time_from: str | None = None
     time_layout: str = "%d/%b/%Y:%H:%M:%S"
     severity_from: str | None = None

@@ -42,10 +42,6 @@ def h31(c: Column) -> Column:
     return h60(c) % F.lit(MERSENNE31)
 
 
-def perm_hash(h: Column, a: int, b: int) -> Column:
-    return (h * F.lit(a) + F.lit(b)) % F.lit(MERSENNE31)
-
-
 # -- DuckDB side (SQL fragments) ---------------------------------------------
 
 def duck_h60(e: str) -> str:

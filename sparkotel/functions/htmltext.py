@@ -20,27 +20,17 @@ mirrors the fileconsumer's split-then-trim shape
 (/root/reference/pkg/stanza/fileconsumer/internal/splitter — split on
 structure first, normalise after), applied to markup instead of lines.
 
-Scope (documented): the default (``engine='native'``) entity decoding
-covers the named set below; numeric character references
-(``&#NNN;``/``&#xHH;``) pass through unchanged — decoding them needs a
-chr() inside a replace, which is not expressible as a JVM column op.
-``main_text(..., engine='pandas')`` is the full-fidelity arm (same
-boilerplate/tag pipeline, final decode via stdlib ``html.unescape`` in
-an Arrow-batched pandas UDF — the parse stage's dual-engine pattern):
-use it for corpora with numeric references or exotic named entities;
-the synthetic corpus never emits them, so both engines agree there
-(tests/test_htmltext.py differential-tests this).
-
-Measured at 500k pages/local[32]: native 0.53 s, pandas 0.42 s —
-Python's regex edges out Java's on this chain, but native stays the
-default for the same reasons as the parse stage: zero Python worker
-processes (the scaling bench's thread budget stays honest) and a pure
-whole-stage-codegen plan.
+Scope (documented): entity decoding covers the named set below;
+numeric character references (``&#NNN;``/``&#xHH;``) pass through
+unchanged — decoding them needs a chr() inside a replace, which is not
+expressible as a JVM column op.  The synthetic corpus never emits them.
+There is one engine, the JVM chain: no Python worker processes, a pure
+whole-stage-codegen plan (the parse stage's reasoning, see
+``pipeline.parse_stage``).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -64,24 +54,10 @@ ENTITIES = [
 ]
 
 
-def main_text(
-    html: Column | str, charset: str = "UTF-8", engine: str = "native"
-) -> Column:
-    """Extracted main text (string Column) from an html binary column.
-
-    ``engine='native'``: JVM regexp/replace chain (zero UDF — default).
-    ``engine='pandas'``: Arrow-batched full-fidelity arm — same
-    boilerplate/paragraph/tag pipeline, entity decode via stdlib
-    ``html.unescape`` (numeric character references, the full named
-    table).  Divergence by design: unescape is spec-exact, so
-    ``&nbsp;`` becomes U+00A0 where the native arm normalizes to a
-    plain space.
-    """
+def main_text(html: Column | str, charset: str = "UTF-8") -> Column:
+    """Extracted main text (string Column) from an html binary column:
+    a JVM regexp/replace chain, zero UDF."""
     col = F.col(html) if isinstance(html, str) else html
-    if engine == "pandas":
-        return _pandas_extract(charset)(col)
-    if engine != "native":  # pragma: no cover
-        raise ValueError(engine)
     s = F.decode(col, charset)
     s = F.regexp_replace(s, SCRIPT_RE, "")
     s = F.regexp_replace(s, STYLE_RE, "")
@@ -92,34 +68,3 @@ def main_text(
     for ent, ch in ENTITIES:
         t = F.replace(t, F.lit(ent), F.lit(ch))
     return t
-
-
-def _pandas_extract(charset: str):
-    """The full-fidelity extraction UDF (see main_text engine='pandas')."""
-    import html as _htmlmod
-    import re
-
-    from pyspark.sql.functions import pandas_udf
-
-    script = re.compile(SCRIPT_RE)
-    style = re.compile(STYLE_RE)
-    comment = re.compile(COMMENT_RE)
-    para = re.compile(PARA_RE)
-    tag = re.compile(TAG_RE)
-
-    @pandas_udf("string")
-    def extract(b: pd.Series) -> pd.Series:
-        def one(payload):
-            if payload is None:
-                return None
-            s = bytes(payload).decode(charset, errors="replace")
-            s = script.sub("", s)
-            s = style.sub("", s)
-            s = comment.sub("", s)
-            t = "\n".join(m.group(1) for m in para.finditer(s))
-            t = tag.sub("", t)
-            return _htmlmod.unescape(t)
-
-        return b.map(one)
-
-    return extract

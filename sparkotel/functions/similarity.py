@@ -531,15 +531,17 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     kmeans_iters: int = 0,
+    dim: int = 64,
 ) -> DataFrame:
     """IVF ANN: probe the query's ``n_probe`` closest cells, exact
     cosine only within them.  Corpus side is one scan (assign = pure
     column math); the query side broadcasts.  ``kmeans_iters > 0``
-    refines the seed centroids with deterministic Lloyd iterations."""
+    refines the seed centroids with deterministic Lloyd iterations.
+    ``dim`` is the embedding length a centroid seed must have."""
     if kmeans_iters > 0:
-        cents = ivf_kmeans_centroids(df, n_centroids, kmeans_iters, id_col, vec_col)
+        cents = ivf_kmeans_centroids(df, n_centroids, kmeans_iters, id_col, vec_col, dim)
     else:
-        cents = ivf_centroid_rows(df, n_centroids, id_col, vec_col)
+        cents = ivf_centroid_rows(df, n_centroids, id_col, vec_col, dim)
     assigned = ivf_assign(df, cents, id_col, vec_col)
     vec = F.col(vec_col)
     ranked_cells = F.reverse(

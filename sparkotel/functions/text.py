@@ -2285,9 +2285,11 @@ def paragraph_dedup(
 
 def duck_paragraph_dedup(table: str = "documents") -> str:
     """Oracle twin — 1-based generate positions shifted to 0-based so
-    the drop sets match posexplode exactly."""
+    the drop sets match posexplode exactly.  An empty word list renders
+    NULL in DuckDB (string_agg over nothing) but '' in Spark
+    (array_join), hence the coalesce — as in ``duck_c4_text``."""
     return f"""
-WITH src AS (SELECT doc_id, text, {duck_lined_text('text')} AS t FROM {table}),
+WITH src AS (SELECT doc_id, text, coalesce({duck_lined_text('text')}, '') AS t FROM {table}),
 d AS (SELECT doc_id, text, string_split_regex(t, '\\n{{2,}}') AS arr FROM src),
 paras AS (
   SELECT doc_id, u.p AS p, u.pos AS pos FROM (
@@ -2451,16 +2453,18 @@ def _duck_bpe_parts(table: str, k: int) -> list:
         parts.append(
             f"b{i} AS (SELECT a, b, cnt FROM p{i} ORDER BY cnt DESC, a, b LIMIT 1)"
         )
+        # an empty b{i} (vocabulary fully merged before round i) makes
+        # the round a no-op — a CROSS JOIN would empty every later v
         parts.append(
             f"""v{i} AS (
   SELECT w, n,
-    CASE WHEN len(syms) <= 1 THEN syms ELSE
+    CASE WHEN b{i}.a IS NULL OR len(syms) <= 1 THEN syms ELSE
       list_reduce(list_transform(syms, x -> [x]), (acc, x) ->
         CASE WHEN acc[len(acc)] = b{i}.a AND x[1] = b{i}.b
              THEN list_append(list_slice(acc, 1, len(acc) - 1), b{i}.a || b{i}.b)
              ELSE list_append(acc, x[1]) END)
     END AS syms
-  FROM v{i - 1} CROSS JOIN b{i}
+  FROM v{i - 1} LEFT JOIN b{i} ON TRUE
 )"""
         )
     return parts

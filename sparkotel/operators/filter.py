@@ -66,11 +66,6 @@ def stanza_filter(
     return df.filter(~(cond & (bucket < F.lit(int(drop_ratio * 10000)))))
 
 
-def filter_min_severity(df: DataFrame, min_severity: int, col: str = "severity_number") -> DataFrame:
-    """Legacy include-matcher min-severity (filterprocessor severity_number)."""
-    return df.filter(F.col(col) >= F.lit(min_severity))
-
-
 def probabilistic_sampler(
     df: DataFrame,
     percent: float,

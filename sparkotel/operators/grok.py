@@ -6,7 +6,7 @@ a grok expression of ``%{PATTERN:name}`` / ``%{PATTERN:name:type}``
 references is expanded (recursively, against a built-in + custom
 dictionary) into one regex with named groups at PLAN TIME on the
 driver; execution is the ordinary vectorized regex parse (native
-``regexp_extract`` or the Arrow pandas engine) — per-row grok
+``regexp_extract``, the parse stage's one engine) — per-row grok
 interpretation never happens.
 
 Typed captures (``:int``/``:float``) cast after extraction, like
@@ -135,7 +135,7 @@ _REF = re.compile(r"%\{(\w+)(?::([\w@.\[\]]+))?(?::(int|float))?\}")
 def expand_grok(
     expr: str, custom: dict[str, str] | None = None, _depth: int = 0
 ) -> tuple[str, list[tuple[str, str | None]]]:
-    """grok expr → (python/RE2 regex with named groups, [(name, type)])."""
+    """grok expr → (regex with positional groups, [(name, type)])."""
     if _depth > 20:
         raise ValueError("grok: pattern recursion too deep")
     patterns = {**GROK_PATTERNS, **(custom or {})}
@@ -168,7 +168,6 @@ def grok_parser(
     parse_from: str = "text",
     custom: dict[str, str] | None = None,
     on_error: str = "send",
-    engine: str = "native",
     line1: bool = True,
     named_captures_only: bool = True,
 ) -> DataFrame:
@@ -181,7 +180,7 @@ def grok_parser(
     # column names can't carry dots — sanitize at the DataFrame layer only
     captures = [(re.sub(r"\W", "_", n), t) for n, t in captures]
     groups = [c[0] for c in captures]
-    df = regex_parser(df, regex, groups, parse_from, on_error, engine, line1)
+    df = regex_parser(df, regex, groups, parse_from, on_error, line1)
     for name, typ in captures:
         if typ == "int":
             df = df.withColumn(name, F.col(name).cast("bigint"))

@@ -13,11 +13,10 @@ Reference semantics (all paths cite /root/reference):
 - json/csv/keyvalue/uri/trace parsers — operator/parser/*/parser.go.
 
 Spark-first design: everything is a lazy DataFrame transformation.  The
-default regex engine is native ``regexp_extract`` (JVM, whole-stage
-codegen); an Arrow-batched pandas UDF engine (``engine="pandas"``,
-``pd.Series.str.extract`` — vectorized, never per-row Python) is
-provided for patterns that need python-``re`` semantics, mirroring the
-grok path (pkg/ottl/ottlfuncs/func_extract_grok_patterns.go:39-126).
+regex parser has one engine, native ``regexp_extract`` (JVM, whole-stage
+codegen, no Python workers): for a one-pass extraction the Arrow
+transfer to a Python worker costs more than a faster kernel saves
+(measurements in ``pipeline.parse_stage``).
 Failed parses carry an ``_error`` lineage column instead of being
 destroyed, so ``on_error=send`` forwards them unmodified
 (helper/transformer.go:163-167).
@@ -25,13 +24,11 @@ destroyed, so ``on_error=send`` forwards them unmodified
 
 from __future__ import annotations
 
-import re
 from collections.abc import Sequence
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
 
 ON_ERROR_MODES = ("send", "send_quiet", "drop", "drop_quiet")
 
@@ -81,8 +78,7 @@ def text_severity_parser(
 def _apply_on_error(df: DataFrame, matched: Column, on_error: str) -> DataFrame:
     if on_error not in ON_ERROR_MODES:
         raise ValueError(f"on_error must be one of {ON_ERROR_MODES}")
-    # NULL input: rlike yields NULL but the pandas engine yields a miss —
-    # normalize so both engines agree that un-matchable rows are errors
+    # NULL input: rlike yields NULL — un-matchable rows are errors
     df = df.withColumn("_error", ~F.coalesce(matched, F.lit(False)))
     if on_error.startswith("drop"):
         df = df.filter(~F.col("_error"))
@@ -101,115 +97,22 @@ def regex_parser(
     groups: Sequence[str],
     parse_from: str | Column = "text",
     on_error: str = "send",
-    engine: str = "native",
     line1: bool = True,
 ) -> DataFrame:
-    """Extract positional/named groups into typed string columns.
-
-    ``engine='native'``: one ``regexp_extract`` per group — stays inside
-    whole-stage codegen; Catalyst dedups the shared regex compile.
-    ``engine='pandas'``: single Arrow-batched UDF using
-    ``pd.Series.str.extract`` (one pass over the batch, all groups).
-    ``engine='arrow'``: single Arrow-batched UDF running RE2 in C++ via
-    ``pyarrow.compute.extract_regex`` — one pass, no per-row Python;
-    measured ~2x the pandas engine on the bench corpus.  RE2 has no
-    backreferences/lookaround: unsupported patterns are rejected at
-    plan time with guidance to use ``engine='pandas'``.
-    """
+    """Extract positional/named groups into typed string columns: one
+    ``regexp_extract`` per group — stays inside whole-stage codegen;
+    Catalyst dedups the shared regex compile.  Patterns use JVM regex
+    syntax (named groups as ``(?<n>``)."""
     src = first_line(parse_from) if line1 else (
         F.col(parse_from) if isinstance(parse_from, str) else parse_from
     )
-    if engine == "native":
-        df = df.withColumn("_src", src)
-        matched = F.col("_src").rlike(pattern)
-        for i, g in enumerate(groups):
-            df = df.withColumn(
-                g, F.when(matched, F.regexp_extract(F.col("_src"), pattern, i + 1))
-            )
-        df = _apply_on_error(df, matched, on_error).drop("_src")
-        return df
-    if engine == "pandas":
-        out_schema = StructType([StructField(g, StringType()) for g in groups])
-        compiled = re.compile(pattern)
-
-        @F.pandas_udf(out_schema)
-        def extract(s: pd.Series) -> pd.DataFrame:
-            ext = s.str.extract(compiled)
-            ext.columns = list(groups)
-            return ext
-
-        df = df.withColumn("_m", extract(src))
-        matched = F.col("_m").getField(groups[0]).isNotNull()
-        for g in groups:
-            df = df.withColumn(g, F.col("_m").getField(g))
-        return _apply_on_error(df, matched, on_error).drop("_m")
-    if engine == "arrow":
-        out_schema = StructType([StructField(g, StringType()) for g in groups])
-        named_pat, posnames = _re2_name_groups(pattern, groups)
-
-        @F.pandas_udf(out_schema)
-        def extract_a(s: pd.Series) -> pd.DataFrame:
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            st = pc.extract_regex(pa.Array.from_pandas(s), named_pat)
-            return pd.DataFrame({
-                g: pc.struct_field(st, posnames[i]).to_pandas()
-                for i, g in enumerate(groups)
-            })
-
-        df = df.withColumn("_m", extract_a(src))
-        matched = F.col("_m").getField(groups[0]).isNotNull()
-        for g in groups:
-            df = df.withColumn(g, F.col("_m").getField(g))
-        return _apply_on_error(df, matched, on_error).drop("_m")
-    raise ValueError(f"unknown engine {engine!r}")
-
-
-def _re2_name_groups(pattern: str, groups: Sequence[str]) -> tuple[str, list[str]]:
-    """RE2's ``extract_regex`` requires every capture group to be named:
-    name each unnamed group ``_g<position>``, keep existing ``(?P<n>``
-    names, and return (named pattern, output struct-field name per
-    positional group).  Validates RE2 support at plan time (one compile
-    against an empty array) so syntax gaps fail the build, not a task."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    cp = re.compile(pattern)
-    if cp.groups != len(groups):
-        raise ValueError(
-            f"pattern has {cp.groups} groups, expected {len(groups)}"
+    df = df.withColumn("_src", src)
+    matched = F.col("_src").rlike(pattern)
+    for i, g in enumerate(groups):
+        df = df.withColumn(
+            g, F.when(matched, F.regexp_extract(F.col("_src"), pattern, i + 1))
         )
-    inv = {v: k for k, v in cp.groupindex.items()}
-    posnames = [inv.get(p, f"_g{p}") for p in range(1, cp.groups + 1)]
-    unnamed = iter(n for p, n in enumerate(posnames, 1) if p not in inv)
-    out, i, in_class = [], 0, False
-    while i < len(pattern):
-        c = pattern[i]
-        if c == "\\":
-            out.append(pattern[i : i + 2])
-            i += 2
-            continue
-        if in_class:
-            if c == "]":
-                in_class = False
-        elif c == "[":
-            in_class = True
-        elif c == "(" and pattern[i + 1 : i + 2] != "?":
-            out.append(f"(?P<{next(unnamed)}>")
-            i += 1
-            continue
-        out.append(c)
-        i += 1
-    named_pat = "".join(out)
-    try:
-        pc.extract_regex(pa.array([], type=pa.string()), named_pat)
-    except pa.lib.ArrowInvalid as e:
-        raise ValueError(
-            f"pattern not supported by RE2 (engine='arrow'): {e}; "
-            "use engine='pandas' for backreferences/lookaround"
-        ) from None
-    return named_pat, posnames
+    return _apply_on_error(df, matched, on_error).drop("_src")
 
 
 # Spark datetime pattern translation for strptime directives

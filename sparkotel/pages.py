@@ -16,15 +16,17 @@ Shape mirrors the reference's stanza/filelog test corpora: line 1 of
 distribution is skewed (top 3 hosts ≈ 50% of rows) to exercise salted
 repartitioning.
 
-Two dialects are generated from one template; ``tests/test_pages.py``
-asserts row-identical output between engines.
+Two dialects (Spark SQL and DuckDB) are generated from one template;
+``tests/test_pages.py`` asserts row-identical output between them.  The
+parse stage that reads these rows has one regex engine, native
+``regexp_extract``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Regex parsed by the parse stage (RE2 ∩ python-re ∩ duckdb-re safe).
+# Regex parsed by the parse stage (JVM-regex ∩ python-re ∩ duckdb-RE2 safe).
 LOG_PATTERN = (
     r'^(\S+) - (\S+) \[([^\]]+)\] "(\S+) (\S+) HTTP/1\.1" (\d+) (\d+)'
 )

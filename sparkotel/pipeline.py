@@ -54,20 +54,18 @@ SINK_METRICS: dict[str, list[A.MetricDef]] = {
 }
 
 
-def parse_stage(df: DataFrame, on_error: str = "send", engine: str = "native") -> DataFrame:
+def parse_stage(df: DataFrame, on_error: str = "send") -> DataFrame:
     """regex parse + type conversion + time + severity.
 
-    Default engine is ``native`` (one ``regexp_extract`` per group,
-    whole-stage codegen, zero Python workers): re-measured round 4 at
-    local[32] it is the fastest end-to-end at BOTH 500k docs (0.71 s vs
-    pandas 1.20 / arrow 1.19) and 2M docs (1.79 s vs 2.09 / 2.07) — the
-    r2-era "pandas 1.8x faster" result no longer reproduces (the
-    surrounding pipeline got cheaper, so the Arrow transfer + Python
-    worker overhead now dominates the one-pass extraction win).  All
-    three engines are proven row-identical
-    (tests/test_differential.py::test_pandas_engine_equals_native).
+    The regex parse has one engine, native ``regexp_extract`` (one per
+    group, whole-stage codegen, zero Python workers).  It was measured
+    against a pandas-UDF and an RE2 (Arrow) arm on a 4-core host at
+    local[4], 100,000 pages into a noop sink, medians of 4 rounds:
+    0.56 s wall vs 0.72 s / 0.71 s, 1.84 CPU-s vs 2.66 / 2.58 —
+    for a one-pass extraction the Arrow transfer and Python workers cost
+    more than a faster kernel saves.
     """
-    df = PR.regex_parser(df, P.LOG_PATTERN, P.LOG_GROUPS, "text", on_error, engine)
+    df = PR.regex_parser(df, P.LOG_PATTERN, P.LOG_GROUPS, "text", on_error)
     df = E.attr_convert(df, "status", "int")
     df = E.attr_convert(df, "nbytes", "bigint")
     # all fixture offsets are +0000; parse the naive prefix so the
@@ -97,7 +95,7 @@ def enrich_stage(spark: SparkSession, df: DataFrame) -> DataFrame:
     return df
 
 
-def build(spark: SparkSession, sf_dir: str, engine: str = "pandas") -> dict:
+def build(spark: SparkSession, sf_dir: str) -> dict:
     """Run the full pipeline lazily; returns all intermediate frames.
 
     The enriched prefix feeds 4 sinks + their aggregates — at scale it
@@ -105,7 +103,7 @@ def build(spark: SparkSession, sf_dir: str, engine: str = "pandas") -> dict:
     here the frames stay lazy and the caller decides.
     """
     src = P.pages(spark, sf_dir).drop("html")  # prune the heavy column early
-    parsed = parse_stage(src, engine=engine)
+    parsed = parse_stage(src)
     enriched = enrich_stage(spark, parsed)
     routed = assign_routes(enriched, ROUTES, "other")
     sinks = route_outputs(enriched, ROUTES, "other")

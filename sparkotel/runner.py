@@ -43,8 +43,7 @@ def _lookup_table(spark: SparkSession, name: str) -> DataFrame:
 def build_routed(spark: SparkSession, src: DataFrame, spec: PipelineSpec) -> DataFrame:
     """source → routed, fully lazy."""
     df = PR.regex_parser(
-        src, spec.parse.pattern, spec.parse.groups, "text",
-        spec.parse.on_error, spec.parse.engine,
+        src, spec.parse.pattern, spec.parse.groups, "text", spec.parse.on_error
     )
     for f_ in spec.parse.int_fields:
         df = E.attr_convert(df, f_, "bigint" if f_ == "nbytes" else "int")

@@ -44,13 +44,3 @@ def write_sink(
     if group_by:
         w = w.partitionBy(group_by)
     w.format(fmt).save(path)
-
-
-def write_sinks(sinks: dict[str, DataFrame], base: str, **kw) -> None:
-    """routingconnector fan-out: one directory per sink.
-
-    The caller should persist/cache the shared enriched prefix first —
-    each sink write is an action and would otherwise rescan the source.
-    """
-    for name, df in sinks.items():
-        write_sink(df, f"{base}/{name}", **kw)

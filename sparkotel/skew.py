@@ -76,9 +76,3 @@ def salted_count(df: DataFrame, key: str, heavy: list | None = None, n_salt: int
     salted = add_salt(df, key, heavy, n_salt)
     partial = salted.groupBy(key, "_salt").agg(F.count(F.lit(1)).alias("_partial"))
     return partial.groupBy(key).agg(F.sum("_partial").alias("count"))
-
-
-def repartition_salted(df: DataFrame, key: str, heavy: list, n_salt: int = 16) -> DataFrame:
-    """Co-locate by (key, salt) so downstream per-key work spreads the
-    heavy keys across n_salt tasks."""
-    return add_salt(df, key, heavy, n_salt).repartition(key, "_salt")

@@ -47,8 +47,8 @@ def stream_pages(spark: SparkSession, input_dir: str, max_files: int = 10) -> Da
     )
 
 
-def routed_stream(spark: SparkSession, pages: DataFrame, engine: str = "native") -> DataFrame:
-    parsed = parse_stage(pages, engine=engine)
+def routed_stream(spark: SparkSession, pages: DataFrame) -> DataFrame:
+    parsed = parse_stage(pages)
     enriched = enrich_stage(spark, parsed)
     return assign_routes(enriched, ROUTES, "other")
 

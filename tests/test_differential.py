@@ -48,30 +48,6 @@ def test_parse_matches_python_oracle(spark):
             assert got[f] == exp[f], f"doc {doc_id} field {f}: {got[f]!r} != {exp[f]!r}"
 
 
-def test_pandas_engine_equals_native(spark):
-    """All three regex engines (native regexp_extract, pandas
-    Series.str.extract, pyarrow RE2 extract_regex) must produce the
-    identical result."""
-    src = P.pages(spark, SF_DIR).drop("html")
-    a = PL.parse_stage(src, engine="native").select("url", "ip", "status", "_error")
-    ra = sorted([tuple(r) for r in a.collect()])
-    for engine in ("pandas", "arrow"):
-        b = PL.parse_stage(src, engine=engine).select("url", "ip", "status", "_error")
-        rb = sorted([tuple(r) for r in b.collect()])
-        assert ra == rb, engine
-
-
-def test_arrow_engine_rejects_non_re2(spark):
-    """RE2 gaps (backreferences) fail at plan time with guidance."""
-    import pytest
-
-    from sparkotel.operators.parse import regex_parser
-
-    src = P.pages(spark, SF_DIR).drop("html")
-    with pytest.raises(ValueError, match="engine='pandas'"):
-        regex_parser(src, r"(\w+) \1", ["w"], "text", engine="arrow")
-
-
 def test_route_matches_python_oracle(spark):
     out = PL.build(spark, SF_DIR)
     routed = {r["url"]: r for r in out["routed"].select("url", "route", "geo_country").collect()}

@@ -83,27 +83,13 @@ def test_extraction_plan_is_scan_only(spark):
     assert "Python" not in plan and "BatchEvalPython" not in plan
 
 
-def test_pandas_engine_matches_native_on_corpus(spark):
-    """Dual-engine differential: on the synthetic corpus (no numeric
-    refs, no exotic entities) the Arrow full-fidelity arm and the JVM
-    arm extract identically."""
-    df = P.pages(spark, SF_DIR).select(
-        HT.main_text("html").alias("native"),
-        HT.main_text("html", engine="pandas").alias("arrow"),
-    )
-    assert df.filter("native IS DISTINCT FROM arrow").count() == 0
-
-
-def test_pandas_engine_decodes_numeric_refs(spark):
-    """Numeric character references: the Arrow arm decodes them
-    (html.unescape), the native arm passes them through (documented)."""
+def test_native_passes_numeric_refs_through(spark):
+    """Numeric character references and entities outside the named set
+    pass through unchanged (documented scope of the JVM chain)."""
     from pyspark.sql import functions as F
 
     h = "<html><body><p>A&#66;C &#x44; &eacute; &copy;2024</p></body></html>"
-    df = spark.createDataFrame([(h,)], "h string").select(
-        HT.main_text(F.col("h").cast("binary")).alias("native"),
-        HT.main_text(F.col("h").cast("binary"), engine="pandas").alias("arrow"),
-    )
-    r = df.first()
-    assert r["arrow"] == "ABC D é ©2024"
+    r = spark.createDataFrame([(h,)], "h string").select(
+        HT.main_text(F.col("h").cast("binary")).alias("native")
+    ).first()
     assert r["native"] == "A&#66;C &#x44; &eacute; &copy;2024"

@@ -268,6 +268,37 @@ def test_ivf_kmeans_rebalances_skewed_seeds(spark):
     assert c1 == c2
 
 
+def test_ivf_topk_non_default_dim_matches_oracle(spark):
+    """ivf_topk seeds centroids from vectors exactly ``dim`` long: at
+    dim 8 both the seeded and the k-means branch must find seeds and
+    agree with their DuckDB twins."""
+    import duckdb
+
+    from test_oracle_parity import oracle_rows, spark_rows
+
+    dim = 8
+    rows = [
+        (i, [float((i * 7 + d * 3) % 11) - 5.0 for d in range(dim)]) for i in range(120)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE emb8 (vec_id BIGINT, embedding DOUBLE[])")
+    con.executemany("INSERT INTO emb8 VALUES (?, ?)", rows)
+    qids = [0, 1, 2, 3, 4]
+    seeded = SIM.ivf_topk(df, qids, n_centroids=4, n_probe=2, dim=dim)
+    assert spark_rows(seeded) == oracle_rows(
+        con, SIM.duck_ivf_topk(qids, n_centroids=4, n_probe=2, table="emb8", dim=dim)
+    )
+    refined = SIM.ivf_topk(df, qids, n_centroids=4, n_probe=2, kmeans_iters=2, dim=dim)
+    assert spark_rows(refined) == oracle_rows(
+        con,
+        SIM.duck_ivf_kmeans_topk(
+            qids, n_centroids=4, n_probe=2, iters=2, table="emb8", dim=dim
+        ),
+    )
+    assert seeded.count() == 5 * len(qids)
+
+
 def test_file_attrs_and_line_split_options(spark):
     """fileconsumer attrs + trim/encoding line-split options."""
     # attrs must attach at the scan (input_file_name is empty after a
@@ -1641,6 +1672,32 @@ def test_paragraph_dedup_keep_first(spark):
     assert got[1]["n_dropped"] == 1 and got[1]["dedup_text"] == "zz table"
     assert got[2]["dedup_text"] is None and got[2]["n_dropped"] == 0
     assert got[3]["n_dropped"] == 0 and "unique" in got[3]["dedup_text"]
+
+
+@pytest.mark.parametrize("op", ["paragraph_dedup", "bpe_encode_stats"])
+def test_text_op_matches_duck_twin_on_degenerate_rows(spark, op):
+    """Spark and DuckDB agree on degenerate rows: empty, blank and NULL
+    text (paragraph_dedup's n_paras is 0, not NULL), and a vocabulary
+    that fully merges after one round, long before k (``'ab ab'`` /
+    ``'ab'``: the later BPE rounds are no-ops, not an empty vocab)."""
+    import duckdb
+
+    from test_oracle_parity import oracle_rows, spark_rows
+
+    from sparkotel.functions import text as T
+
+    rows = [(0, "ab ab"), (1, "ab"), (2, ""), (3, " "), (4, None)]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO docs VALUES (?, ?)", rows)
+    out = getattr(T, op)(df)
+    assert spark_rows(out) == oracle_rows(con, getattr(T, f"duck_{op}")(table="docs"))
+    by_id = {r["doc_id"]: r for r in out.collect()}
+    if op == "paragraph_dedup":
+        assert [by_id[i]["n_paras"] for i in (2, 3, 4)] == [0, 0, 0]
+    else:
+        assert by_id[0]["n_bpe_tokens"] == 2 and by_id[1]["n_bpe_tokens"] == 1
 
 
 def test_bpe_train_matches_reference_algorithm(spark):
