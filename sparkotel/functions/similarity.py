@@ -855,6 +855,7 @@ def ivf_recall(
     n_probe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    dim: int = 64,
 ) -> DataFrame:
     """Index-quality evaluation: per-query recall@k of the IVF index
     against the exact brute-force top-k — the standard ANN acceptance
@@ -872,7 +873,7 @@ def ivf_recall(
         "qid", "cid"
     )
     approx = ivf_topk(
-        df, query_ids, k, n_centroids, n_probe, id_col, vec_col
+        df, query_ids, k, n_centroids, n_probe, id_col, vec_col, dim=dim
     ).select(F.col("qid").alias("aqid"), F.col("cid").alias("acid"))
     hits = truth.join(
         approx,

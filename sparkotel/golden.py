@@ -120,7 +120,13 @@ def iforest_golden(
     """Single-process twin of the registry ``isolation_forest`` query:
     events → (x = value, y = props.k or 0) → md5-ranked training window
     → seeded forest → score all rows → (1-contamination) exact-percentile
-    threshold → flagged rows (event_id, x, y, round(score, 6))."""
+    threshold → flagged rows (event_id, x, y, round(score, 6)).
+
+    Evidence class: this twin shares ``train_forest`` and ``score_rows``
+    with the query, so it checks the Spark plumbing (the md5 training
+    window, the scoring distribution, the exact-percentile threshold),
+    not the algorithm.  The algorithm evidence is tests/test_iforest.py:
+    planted-outlier ranking, seed determinism and degenerate score math."""
     from sparkotel.functions.iforest import score_rows, train_forest
 
     ev = pd.read_parquet(

@@ -3,11 +3,11 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from sparkotel.parity import duck_con  # noqa: E402
 from sparkotel.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARKOTEL_TEST_SF", "/root/testdata/sf0.001")
@@ -22,28 +22,6 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    con = duckdb.connect()
-    for name in [
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.sql(
-            f"CREATE VIEW {name} AS SELECT * FROM '{SF_DIR}/{name}.parquet'"
-        )
+    con = duck_con(SF_DIR)
     yield con
     con.close()
-
-
-def df_rows(sdf, sort_cols=None):
-    """Spark DataFrame → sorted list of tuples (order-insensitive compare)."""
-    cols = sorted(sdf.columns)
-    rows = [tuple(r[c] for c in cols) for r in sdf.select(*cols).collect()]
-    return sorted(rows, key=repr)
-
-
-def duck_rows(con, sql):
-    rel = con.sql(sql)
-    cols = sorted(rel.columns)
-    df = rel.df()[cols]
-    rows = [tuple(r) for r in df.itertuples(index=False)]
-    return sorted(rows, key=repr)

@@ -1,64 +1,37 @@
 """Driver-style correctness gate run locally: every registry query's
 Spark result must match its DuckDB oracle (row count + sorted-column
-value equality), at sf0.001 for speed.  This is the same comparison the
-harness runs at sf0.01."""
+value equality, through ``sparkotel.parity``), at sf0.001 for speed.
+This is the same comparison the harness runs at sf0.01."""
 
 from __future__ import annotations
-
-import math
 
 import pytest
 from conftest import SF_DIR
 
+from sparkotel.parity import duck_rows, spark_rows
 from sparkotel.registry import build_registry
 
 REG = build_registry()
-
-
-def _norm(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return round(v, 9)
-    if isinstance(v, bytes):
-        return v.hex()
-    return v
-
-
-def spark_rows(sdf):
-    cols = sorted(sdf.columns)
-    return sorted(
-        [tuple(_norm(r[c]) for c in cols) for r in sdf.select(*cols).collect()],
-        key=repr,
-    )
-
-
-def oracle_rows(duck, sql):
-    rel = duck.sql(sql)
-    cols = sorted(rel.columns)
-    import pandas as pd
-
-    df = rel.df()[cols]
-    out = []
-    for r in df.itertuples(index=False):
-        row = []
-        for v in r:
-            if v is pd.NaT or (isinstance(v, float) and math.isnan(v)):
-                row.append(None)
-            elif hasattr(v, "to_pydatetime"):
-                row.append(_norm(v.to_pydatetime()))
-            else:
-                row.append(_norm(v))
-        out.append(tuple(row))
-    return sorted(out, key=repr)
 
 
 @pytest.mark.parametrize("name", [n for n, q in REG.items() if q.oracle])
 def test_query_matches_oracle(spark, duck, name):
     q = REG[name]
     srows = spark_rows(q.spark(spark, SF_DIR))
-    drows = oracle_rows(duck, q.oracle)
+    drows = duck_rows(duck, q.oracle)
     assert len(srows) == len(drows), f"{name}: row count {len(srows)} vs {len(drows)}"
     assert len(srows) > 0, f"{name}: empty result"
     for i, (a, b) in enumerate(zip(srows, drows)):
         assert a == b, f"{name}: first mismatch at sorted row {i}:\n spark={a}\n duck ={b}"
+
+
+def test_nan_and_null_match_across_engines(spark, duck):
+    """A NaN equals a NaN, and a NULL integer (NaN on DuckDB's pandas
+    path) equals a NULL."""
+    sql = "SELECT CAST('NaN' AS DOUBLE) AS x, CAST(NULL AS BIGINT) AS n"
+    assert spark_rows(spark.sql(sql)) == duck_rows(duck, sql)
+
+
+def test_null_double_differs_from_nan(spark, duck):
+    got = spark_rows(spark.sql("SELECT CAST(NULL AS DOUBLE) AS x"))
+    assert got != duck_rows(duck, "SELECT 'NaN'::DOUBLE AS x")

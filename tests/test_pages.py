@@ -7,15 +7,16 @@ binary html column, which is Spark-plumbing-only in oracle queries).
 
 from __future__ import annotations
 
-from conftest import SF_DIR, df_rows, duck_rows
+from conftest import SF_DIR
 
 from sparkotel import pages as P
+from sparkotel.parity import duck_rows, spark_rows
 
 
 def test_pages_cross_engine(spark, duck):
     P.load_tables(spark, SF_DIR, ["documents"])
     sdf = spark.sql(P.spark_pages_sql()).drop("html")
-    srows = df_rows(sdf)
+    srows = spark_rows(sdf)
     drows = duck_rows(
         duck, f"SELECT url, warc_ts, text, lang, host, doc_id FROM ({P.duckdb_pages_sql()}) p"
     )
@@ -43,11 +44,11 @@ def test_pages_shape(spark):
 
 
 def test_geo_cross_engine(spark, duck):
-    srows = df_rows(spark.sql(P.spark_geo_sql()))
+    srows = spark_rows(spark.sql(P.spark_geo_sql()))
     drows = duck_rows(duck, P.duckdb_geo_sql())
     assert len(srows) == 450
     assert srows == drows
 
 
 def test_lang_table(spark, duck):
-    assert df_rows(spark.sql(P.LANG_NAMES_SQL)) == duck_rows(duck, P.LANG_NAMES_SQL)
+    assert spark_rows(spark.sql(P.LANG_NAMES_SQL)) == duck_rows(duck, P.LANG_NAMES_SQL)

@@ -15,6 +15,7 @@ from sparkotel import skew as SK
 from sparkotel import sinks as S
 from sparkotel.functions import multimodal as MM
 from sparkotel.functions import similarity as SIM
+from sparkotel.parity import duck_rows, spark_rows
 
 
 # -- ledger / resume ----------------------------------------------------------
@@ -270,11 +271,9 @@ def test_ivf_kmeans_rebalances_skewed_seeds(spark):
 
 def test_ivf_topk_non_default_dim_matches_oracle(spark):
     """ivf_topk seeds centroids from vectors exactly ``dim`` long: at
-    dim 8 both the seeded and the k-means branch must find seeds and
-    agree with their DuckDB twins."""
+    dim 8 both the seeded and the k-means branch, and ivf_recall on top
+    of them, must find seeds and agree with their DuckDB twins."""
     import duckdb
-
-    from test_oracle_parity import oracle_rows, spark_rows
 
     dim = 8
     rows = [
@@ -286,17 +285,20 @@ def test_ivf_topk_non_default_dim_matches_oracle(spark):
     con.executemany("INSERT INTO emb8 VALUES (?, ?)", rows)
     qids = [0, 1, 2, 3, 4]
     seeded = SIM.ivf_topk(df, qids, n_centroids=4, n_probe=2, dim=dim)
-    assert spark_rows(seeded) == oracle_rows(
+    assert spark_rows(seeded) == duck_rows(
         con, SIM.duck_ivf_topk(qids, n_centroids=4, n_probe=2, table="emb8", dim=dim)
     )
     refined = SIM.ivf_topk(df, qids, n_centroids=4, n_probe=2, kmeans_iters=2, dim=dim)
-    assert spark_rows(refined) == oracle_rows(
+    assert spark_rows(refined) == duck_rows(
         con,
         SIM.duck_ivf_kmeans_topk(
             qids, n_centroids=4, n_probe=2, iters=2, table="emb8", dim=dim
         ),
     )
     assert seeded.count() == 5 * len(qids)
+    assert spark_rows(
+        SIM.ivf_recall(df, qids, n_centroids=4, n_probe=2, dim=dim)
+    ) == duck_rows(con, SIM.duck_ivf_recall(qids, n_centroids=4, n_probe=2, table="emb8", dim=dim))
 
 
 def test_file_attrs_and_line_split_options(spark):
@@ -774,6 +776,30 @@ def test_sessionize_gap_splits(spark):
     assert got[("1.1.1.1", 1)] == (3, 1)
     assert got[("1.1.1.1", 2)] == (1, 1)
     assert got[("2.2.2.2", 1)] == (1, 0)
+
+
+def test_sessionize_sub_second_boundary_matches_oracle(spark):
+    """Gaps of 1799.5 s, 1800.0 s and 1800.5 s: only the one strictly
+    over 30 min opens a session, on both engines (a whole-second epoch
+    would split them differently)."""
+    from datetime import datetime, timedelta
+
+    import duckdb
+
+    from sparkotel.functions import weburl as W
+
+    ts = [datetime(2024, 3, 15, 10, 0, 0)]
+    for gap in (1799.5, 1800.0, 1800.5):
+        ts.append(ts[-1] + timedelta(seconds=gap))
+    rows = [("1.1.1.1", t, i, 500 if i % 2 else 200, False) for i, t in enumerate(ts)]
+    schema = "ip string, log_ts timestamp, doc_id long, status int, _error boolean"
+    df = spark.createDataFrame(rows, schema)
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE parsed ({schema})")
+    con.executemany("INSERT INTO parsed VALUES (?, ?, ?, ?, ?)", rows)
+    out = W.sessionize(df)
+    assert spark_rows(out) == duck_rows(con, f"WITH {W.duck_sessionize()}")
+    assert sorted((r.session_idx, r.n_requests) for r in out.collect()) == [(1, 3), (2, 1)]
 
 
 def test_decontaminate_boilerplate_shingle_not_enough(spark):
@@ -1627,8 +1653,6 @@ def test_semdedup_oracle_parity_degenerate_seeds(spark, tmp_path):
     (zip_with null-pads; the oracle guards on equal lengths)."""
     import duckdb
 
-    from test_oracle_parity import oracle_rows, spark_rows
-
     v1 = [float((i * 7) % 13) - 6.0 for i in range(64)]
     v2 = [float((i * 5) % 11) - 5.0 for i in range(64)]
     rows = [
@@ -1646,7 +1670,7 @@ def test_semdedup_oracle_parity_degenerate_seeds(spark, tmp_path):
     con = duckdb.connect()
     con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{pq}/*.parquet'")
     got = spark_rows(SIM.semdedup(df, tau=0.99))
-    want = oracle_rows(con, SIM.duck_semdedup(tau=0.99))
+    want = duck_rows(con, SIM.duck_semdedup(tau=0.99))
     assert got == want
     by_id = {r["vec_id"]: r for r in SIM.semdedup(df, tau=0.99).collect()}
     assert by_id[6]["is_dup"] and by_id[6]["dup_of"] == 1
@@ -1682,8 +1706,6 @@ def test_text_op_matches_duck_twin_on_degenerate_rows(spark, op):
     ``'ab'``: the later BPE rounds are no-ops, not an empty vocab)."""
     import duckdb
 
-    from test_oracle_parity import oracle_rows, spark_rows
-
     from sparkotel.functions import text as T
 
     rows = [(0, "ab ab"), (1, "ab"), (2, ""), (3, " "), (4, None)]
@@ -1692,7 +1714,7 @@ def test_text_op_matches_duck_twin_on_degenerate_rows(spark, op):
     con.execute("CREATE TABLE docs (doc_id BIGINT, text VARCHAR)")
     con.executemany("INSERT INTO docs VALUES (?, ?)", rows)
     out = getattr(T, op)(df)
-    assert spark_rows(out) == oracle_rows(con, getattr(T, f"duck_{op}")(table="docs"))
+    assert spark_rows(out) == duck_rows(con, getattr(T, f"duck_{op}")(table="docs"))
     by_id = {r["doc_id"]: r for r in out.collect()}
     if op == "paragraph_dedup":
         assert [by_id[i]["n_paras"] for i in (2, 3, 4)] == [0, 0, 0]

@@ -102,27 +102,16 @@ def build_fixture(src: str, dst: str) -> None:
 
 
 def main() -> int:
-    import importlib.util
-
     base = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     dst = "/tmp/sparkotel_degenerate"
     build_fixture(base, dst)
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", os.path.join(repo, "__spark_entry__.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import __spark_entry__ as mod
 
-    from pyspark.sql import SparkSession
+    from sparkotel.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app="degenerate-sweep", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     crashed: list[str] = []
     qs = mod.queries()

@@ -1,77 +1,42 @@
-"""Simulate the driver's Spark-vs-DuckDB oracle compare for a subset of
-registry queries: ``python tools/verify_subset.py q1 q2 ...`` (no args =
-all).  Mirrors .claude/skills/verify/SKILL.md."""
-import importlib.util
-import math
+"""Simulate the driver: the ``entry()`` smoke, then the ``sparkotel.parity``
+compare of each named registry query at sf0.01.  Usage:
+``python tools/verify_subset.py q1 q2 ...`` (no args = all); exits 1 on a
+mismatch or an empty ``entry()``."""
+import os
 import sys
-
-import duckdb
-import pandas as pd
 
 SF = "/root/testdata/sf0.01"
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import __spark_entry__ as mod  # noqa: E402
 
-def norm(v):
-    if isinstance(v, float):
-        return None if math.isnan(v) else round(v, 9)
-    return v.hex() if isinstance(v, (bytes, bytearray)) else v
+from sparkotel import parity  # noqa: E402
+from sparkotel.session import get_spark  # noqa: E402
 
 
 def main() -> int:
-    spec = importlib.util.spec_from_file_location(
-        "__spark_entry__", "__spark_entry__.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
     qs, osql = mod.queries(), mod.oracle_sql()
     names = sys.argv[1:] or list(qs)
     unknown = [n for n in names if n not in qs]
     if unknown:
         print("unknown queries:", unknown)
         return 2
-    con = duckdb.connect()
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
-    bad = 0
+    spark = get_spark(app="verify-subset", shuffle_partitions=8)
+    n_entry = mod.entry(spark).count()
+    print("entry rows:", n_entry)
+    bad = n_entry == 0
+    con = parity.duck_con(SF)
     for name in names:
         if name not in osql:
             print(f"{name:35s} rows-only: {qs[name](spark, SF).count()}")
             continue
-        sdf = qs[name](spark, SF)
-        scols = sorted(sdf.columns)
-        srows = sorted(
-            [tuple(norm(r[c]) for c in scols)
-             for r in sdf.select(*scols).collect()],
-            key=repr,
-        )
-        rel = con.sql(osql[name])
-        pdf = rel.df()[sorted(rel.columns)]
-        drows = sorted(
-            [tuple(None if v is pd.NaT
-                   else (norm(v.to_pydatetime())
-                         if hasattr(v, "to_pydatetime") else norm(v))
-                   for v in r)
-             for r in pdf.itertuples(index=False)],
-            key=repr,
-        )
+        srows = parity.spark_rows(qs[name](spark, SF))
+        drows = parity.duck_rows(con, osql[name])
         ok = srows == drows
         bad += not ok
         print(f"{name:35s} equal: {ok}  rows {len(srows)}/{len(drows)}")
-        if not ok:
-            mism = [(a, b) for a, b in zip(srows, drows) if a != b][:3]
-            for a, b in mism:
-                print("  spark :", a)
-                print("  duckdb:", b)
+        for a, b in [(a, b) for a, b in zip(srows, drows) if a != b][:3]:
+            print(f"  spark : {a}\n  duckdb: {b}")
     spark.stop()
     return 1 if bad else 0
 
