@@ -438,7 +438,8 @@ WHERE bit_count(xor(l.sh, r.sh)) <= {max_hamming}
 def jaccard_pairs(
     df: DataFrame, pairs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Jaccard over distinct word shingles for candidate pairs only."""
+    """Jaccard over distinct word shingles for candidate pairs only;
+    NULL (DuckDB's ``0 / 0.0``) when neither doc has a shingle."""
     sets_df = df.select(
         F.col(id_col), F.array_distinct(shingles(F.col(text_col))).alias("sh")
     )
@@ -451,8 +452,10 @@ def jaccard_pairs(
             "id_a",
             "id_b",
             F.round(
-                F.size(F.array_intersect("a.sh", "b.sh"))
-                / F.size(F.array_union("a.sh", "b.sh")),
+                F.try_divide(
+                    F.size(F.array_intersect("a.sh", "b.sh")),
+                    F.size(F.array_union("a.sh", "b.sh")),
+                ),
                 6,
             ).alias("jaccard"),
         )

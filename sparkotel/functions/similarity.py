@@ -50,34 +50,28 @@ def _dot_unrolled(a: Column, b: Column, dim: int) -> Column:
     merge is sequential, so its sum is the left-associated
     ``((0.0 + x_0) + x_1) + …`` — exactly the chain built here
     (verified bitwise over every fixture pair plus ragged/NULL shapes
-    in test_cosine_fast_bitwise_identical).  The difference is
+    in test_pair_cosine_bitwise_identical).  The difference is
     execution: the HOF form is interpreted per element, the unrolled
-    GetArrayItem/multiply/add chain is not — measured ~30% less time
-    per scored pair on the semdedup pair stage (250k pairs).  The
-    trade: the unrolled expression pays a per-query plan/codegen
-    constant (~1.7 s measured), so it LOSES on small pair counts —
-    brute_force_topk's query-sized candidate set measured 0.6 s HOF
-    vs 2.3 s unrolled, which is why only the high-pair-count semdedup
-    stage uses it.  Callers must guard indexes against short arrays
-    (ANSI throws on out-of-bounds) — see ``cosine_fast``."""
+    GetArrayItem/multiply/add chain is not, but it pays a per-query
+    plan/codegen constant.  Warm ``semdedup`` probe, 4-core host,
+    local[4], norms computed once: unrolled 2.8 / 5.8 / 12.0 s at 400 /
+    2,000 / 8,000 vectors, HOF-only 2.9 / 12.8 / 68.7 s.
+    Callers must guard indexes against short arrays (ANSI throws on
+    out-of-bounds) — see ``pair_cosine``."""
     s = F.lit(0.0)
     for d in range(dim):
         s = s + a[d].cast("double") * b[d].cast("double")
     return s
 
 
-def cosine_fast(a: Column, b: Column, dim: int) -> Column:
-    """``cosine`` with the codegen fast path for ``dim``-sized vectors
-    and the HOF fallback for every other shape (short, ragged, NULL —
-    where zip_with's null-padding semantics must be preserved).  The
-    CaseWhen evaluates only the matching branch per row, so the
-    interpreted fallback is paid exactly on the degenerate rows."""
+def pair_cosine(a: Column, b: Column, na: Column, nb: Column, dim: int) -> Column:
+    """``cosine`` given each side's ``_norm``, computed once per vector
+    upstream (bitwise equal: same fold).  Unrolled dot for ``dim``-sized
+    pairs, HOF ``_dot`` otherwise (short, ragged, NULL keep zip_with's
+    NULL padding); the CaseWhen evaluates only the matching branch."""
     ok = (F.size(a) == dim) & (F.size(b) == dim)
-    fast = F.try_divide(
-        _dot_unrolled(a, b, dim),
-        F.sqrt(_dot_unrolled(a, a, dim)) * F.sqrt(_dot_unrolled(b, b, dim)),
-    )
-    return F.when(ok, fast).otherwise(cosine(a, b))
+    dot = F.when(ok, _dot_unrolled(a, b, dim)).otherwise(_dot(a, b))
+    return F.try_divide(dot, na * nb)
 
 
 def l2_normalize(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -484,7 +478,7 @@ def _cent_struct(vec: Column, cid: int, cvec: list[float]) -> Column:
     # HOF cosine stays here: greatest() over K centroid structs each
     # carrying a 3×dim unrolled chain explodes the generated code past
     # the JIT limits — measured 11 s → 35 s on the semdedup bench when
-    # this site used cosine_fast; the HOF form keeps the expression
+    # this site used the unrolled chain; the HOF form keeps the expression
     # tree small and the assignment cost is K per row, not pair-count
     lit_vec = F.array(*[F.lit(x) for x in cvec])
     return F.struct(
@@ -751,18 +745,16 @@ def semdedup(
     (vec_id, cell, dup_of, max_sim, is_dup).
     """
     cents = ivf_centroid_rows(df, n_centroids, id_col, vec_col, dim)
-    assigned = ivf_assign(
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
-        cents,
-        "id",
-        "vec",
-    )
+    vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+    # each vector's norm once, here, not once per scored pair
+    assigned = ivf_assign(vecs.withColumn("nv", _norm(F.col("vec"))), cents, "id", "vec")
     w = Window.partitionBy("cell").orderBy("id")
     ranked = assigned.withColumn("rk", F.row_number().over(w))
     early = ranked.filter(F.col("rk") <= cap).select(
         F.col("cell").alias("bcell"),
         F.col("id").alias("bid"),
         F.col("vec").alias("bvec"),
+        F.col("nv").alias("bnv"),
     )
     probe = ranked
     try:
@@ -778,11 +770,12 @@ def semdedup(
         # the paper's operating point K ≫ cores, so this branch is off
         # and no extra shuffle is paid.
         probe = ranked.repartition("id")
+    score = pair_cosine(F.col("vec"), F.col("bvec"), F.col("nv"), F.col("bnv"), dim)
     pairs = (
         probe.join(
             early, (F.col("cell") == F.col("bcell")) & (F.col("bid") < F.col("id"))
         )
-        .withColumn("s", F.round(cosine_fast(F.col("vec"), F.col("bvec"), dim), 4))
+        .withColumn("s", F.round(score, 4))
         .filter(F.col("s") >= tau)
     )
     dups = pairs.groupBy("id").agg(

@@ -32,6 +32,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sparkotel.session import local_frame
+
 LEDGER_SCHEMA = "bucket INT, stage STRING, rows BIGINT, committed_at DOUBLE"
 
 
@@ -71,17 +73,9 @@ def committed_buckets(spark: SparkSession, ledger_path: str, stage: str) -> set[
 def commit_bucket(
     spark: SparkSession, ledger_path: str, bucket: int, stage: str, rows: int
 ) -> None:
-    spark.createDataFrame(
-        [(bucket, stage, rows, time.time())], LEDGER_SCHEMA
+    local_frame(
+        spark, [(bucket, stage, rows, time.time())], LEDGER_SCHEMA
     ).coalesce(1).write.mode("append").parquet(ledger_path)
-
-
-def remaining(df: DataFrame, spark: SparkSession, ledger_path: str, stage: str) -> DataFrame:
-    """Filter an already-bucketed frame to not-yet-committed buckets."""
-    done = committed_buckets(spark, ledger_path, stage)
-    if not done:
-        return df
-    return df.filter(~F.col("bucket").isin(sorted(done)))
 
 
 def run_resumable(

@@ -40,6 +40,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sparkotel.session import local_frame
+
 RULE_ATTR = "otelcol.processor.dynamic_sampling.rule"
 
 _COND_RE = re.compile(r"^\s*([\w.]+)\s*(==|!=)\s*(.+?)\s*$")
@@ -167,7 +169,7 @@ def dynamic_sampling(
         # handful of rows.
         scalar_rows = scalars.collect()
         nkeys_total = sum((r["_nkeys"] or 0) for r in scalar_rows)
-        scalars_lit = df.sparkSession.createDataFrame(scalar_rows, scalars.schema)
+        scalars_lit = local_frame(df.sparkSession, scalar_rows, scalars.schema)
         traces = traces.join(
             F.broadcast(scalars_lit), traces["_rule"] == scalars_lit["_rule_s"], "left"
         ).drop("_rule_s")

@@ -30,6 +30,7 @@ from sparkotel.operators import recombine as RC
 from sparkotel.operators import route as R
 from sparkotel.operators import transform as T
 from sparkotel.operators.filter import filter_drop, probabilistic_sampler
+from sparkotel.session import local_frame
 
 # ---------------------------------------------------------------------------
 # DuckDB mirror of the flagship pipeline (pages → parsed → enriched → routed)
@@ -4386,9 +4387,7 @@ FROM m""",
     # RefinedWeb-style URL filtering: UT1-shaped host blocklist
     # (broadcast dim) + weighted keyword scoring (pure projection)
     def url_blocklist_q(spark, sf):
-        bl = spark.createDataFrame(
-            WU.DEFAULT_BLOCKLIST, "host string, category string"
-        )
+        bl = local_frame(spark, WU.DEFAULT_BLOCKLIST, "host string, category string")
         return WU.url_blocklist_filter(
             P.pages(spark, sf).select("url"), bl
         )

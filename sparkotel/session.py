@@ -9,8 +9,12 @@ DuckDB oracle (which uses naive/UTC timestamps).
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -48,3 +52,21 @@ def get_spark(
     for k, v in (extra or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: StructType | str
+) -> DataFrame:
+    """Driver rows (tuples in schema order) as one Arrow table typed
+    from ``schema`` — a ``LocalRelation`` even when empty or all-NULL;
+    ``createDataFrame(list)`` plans a ``LogicalRDD`` whose pickled rows
+    start a Python worker."""
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

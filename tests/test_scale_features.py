@@ -470,6 +470,24 @@ def test_ngram_jaccard_exact_vs_brute_force(spark):
     assert got == want and want  # non-trivial expectation
 
 
+def test_jaccard_pairs_without_shingles_is_null(spark):
+    """two docs with no shingles (empty or NULL text) have no Jaccard:
+    NULL, as DuckDB's ``0 / 0.0`` gives — not an ANSI divide-by-zero
+    that kills the job."""
+    import duckdb
+
+    from sparkotel.functions import dedup as D
+
+    docs = spark.createDataFrame(
+        [(0, ""), (1, ""), (2, None), (3, None), (4, "a b c d e f g h")],
+        "doc_id long, text string",
+    )
+    pairs = spark.createDataFrame([(0, 1), (2, 3), (4, 4)], "id_a long, id_b long")
+    got = {(r.id_a, r.id_b): r.jaccard for r in D.jaccard_pairs(docs, pairs).collect()}
+    assert got == {(0, 1): None, (2, 3): None, (4, 4): 1.0}
+    assert duckdb.sql("SELECT 0 / CAST(0 AS DOUBLE)").fetchall() == [(None,)]
+
+
 def test_ngram_jaccard_degenerate_bucket_capped(spark):
     """identical-doc floods hit the bucket cap, not O(n^2) pairs."""
     from sparkotel.functions import dedup as D
@@ -1612,36 +1630,44 @@ def test_bm25_matches_integer_brute_force(spark):
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_cosine_fast_bitwise_identical(spark):
-    """cosine_fast must reproduce the HOF cosine BITWISE on every
-    fixture pair (same left-fold order) and on ragged/short/NULL
-    shapes (fallback branch)."""
+def _pair_cosine_vs_cosine(df):
+    """(i, HOF cosine, norm-once pair score) with each norm computed in
+    a projection below the pair, as ``semdedup`` carries ``nv``/``bnv``."""
+    normed = df.select(
+        "i", "a", "b",
+        SIM._norm(F.col("a")).alias("na"), SIM._norm(F.col("b")).alias("nb"),
+    )
+    return normed.select(
+        "i",
+        SIM.cosine(F.col("a"), F.col("b")).alias("slow"),
+        SIM.pair_cosine(F.col("a"), F.col("b"), F.col("na"), F.col("nb"), 64).alias("fast"),
+    )
+
+
+def test_pair_cosine_bitwise_identical(spark):
+    """the norm-once pair score must reproduce the HOF cosine BITWISE on
+    every fixture pair (same left-fold order) and on short, ragged,
+    empty, NULL and zero-norm shapes (fallback branch / NULL score)."""
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     a = emb.select(F.col("vec_id").alias("i"), F.col("embedding").alias("a"))
     b = emb.select(F.col("vec_id").alias("j"), F.reverse(F.col("embedding")).alias("b"))
-    chk = a.join(b, F.col("i") == F.col("j")).select(
-        SIM.cosine(F.col("a"), F.col("b")).alias("slow"),
-        SIM.cosine_fast(F.col("a"), F.col("b"), 64).alias("fast"),
-    )
-    bad = chk.filter(
-        ~((F.col("slow") == F.col("fast"))
-          | (F.col("slow").isNull() & F.col("fast").isNull()))
-    ).count()
-    assert bad == 0
+    chk = _pair_cosine_vs_cosine(a.join(b, F.col("i") == F.col("j")))
+    bad = chk.filter(~F.col("slow").eqNullSafe(F.col("fast"))).count()
+    assert bad == 0 and chk.filter(F.col("fast").isNotNull()).count() > 0
     rows = [
         (1, [1.0, 2.0, 3.0], [4.0, 5.0, 6.0]),  # short equal-length → fallback
         (2, [1.0, 2.0], [1.0]),                 # ragged → NULL both
         (3, [], []),                            # empty → NULL both
         (4, None, [1.0] * 64),                  # NULL side
+        (5, [0.0] * 64, [1.0] * 64),            # zero norm → NULL both
+        (6, [0.5] * 64, [0.25] * 63 + [None]),  # NULL element → NULL both
     ]
     df = spark.createDataFrame(rows, "i long, a array<double>, b array<double>")
-    out = df.select(
-        "i",
-        SIM.cosine(F.col("a"), F.col("b")).alias("slow"),
-        SIM.cosine_fast(F.col("a"), F.col("b"), 64).alias("fast"),
-    ).collect()
+    out = _pair_cosine_vs_cosine(df).collect()
+    assert len(out) == len(rows)
     for r in out:
         assert r["slow"] == r["fast"] or (r["slow"] is None and r["fast"] is None)
+    assert {r["i"] for r in out if r["fast"] is None} == {2, 3, 4, 5, 6}
 
 
 def test_semdedup_oracle_parity_degenerate_seeds(spark, tmp_path):
@@ -1722,27 +1748,14 @@ def test_text_op_matches_duck_twin_on_degenerate_rows(spark, op):
         assert by_id[0]["n_bpe_tokens"] == 2 and by_id[1]["n_bpe_tokens"] == 1
 
 
-def test_bpe_train_matches_reference_algorithm(spark):
-    """bpe_train must equal an independent Python replay of Sennrich
-    BPE (greedy leftmost non-overlapping merge, count-then-lex argmax,
-    </w> marker) on a crafted corpus."""
+def _bpe_replay(docs, k):
+    """naive Python Sennrich BPE: every round re-counts every word."""
     from collections import Counter
 
-    from sparkotel.functions import text as T
-
-    docs = [
-        "aaa aaa aaa ab ab banana banana bandana",
-        "aaa ab banana cabana",
-        "",
-    ]
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(docs)], "doc_id long, text string"
-    )
-
-    vocab = Counter(w for t in docs for w in t.split(" ") if w)
+    vocab = Counter(w for t in docs for w in (t or "").split(" ") if w)
     syms = {w: [*w[:-1], w[-1] + "</w>"] for w in vocab}
     expected = []
-    for _ in range(4):
+    for _ in range(k):
         counts = Counter()
         for w, n in vocab.items():
             s = syms[w]
@@ -1760,11 +1773,40 @@ def test_bpe_train_matches_reference_algorithm(spark):
                 else:
                     out.append(x)
             syms[w] = out
-    got = [
-        (r["sym_a"], r["sym_b"], r["merged"], r["pair_count"])
-        for r in T.bpe_train(df, k=4).orderBy("rank").collect()
+    return expected
+
+
+def test_bpe_train_matches_reference_algorithm(spark):
+    """bpe_train must equal an independent Python replay of Sennrich
+    BPE (greedy leftmost non-overlapping merge, count-then-lex argmax,
+    </w> marker) on a crafted corpus, and on the fixture's documents at
+    a k past the round where the vocabulary fully merges."""
+    from sparkotel.functions import text as T
+
+    docs = [
+        "aaa aaa aaa ab ab banana banana bandana",
+        "aaa ab banana cabana",
+        "",
     ]
-    assert got == expected and len(got) == 4
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(docs)], "doc_id long, text string"
+    )
+
+    def got(frame, k):
+        return [
+            (r["sym_a"], r["sym_b"], r["merged"], r["pair_count"])
+            for r in T.bpe_train(frame, k=k).orderBy("rank").collect()
+        ]
+
+    expected = _bpe_replay(docs, 4)
+    assert got(df, 4) == expected and len(expected) == 4
+
+    fixture = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    texts = [r["text"] for r in fixture.select("text").collect()]
+    k = 1000
+    expected = _bpe_replay(texts, k)
+    assert 50 < len(expected) < k  # fully merged long before k
+    assert got(fixture, k) == expected
 
 
 def test_bpe_encode_stats_consistency(spark):
