@@ -78,39 +78,13 @@ def connector_metric(df: DataFrame, mdef: MetricDef, ts_col: str = "warc_ts") ->
     )
 
 
-def connector_metrics_single_pass(
-    df: DataFrame,
+def contributions(
     sink_metrics: Mapping[str, Sequence[MetricDef]],
-    ts_col: str = "warc_ts",
     route_col: str = "route",
     copy_conds: Mapping[str, str] | None = None,
-) -> DataFrame:
-    """ALL metric defs of ALL sinks in ONE shuffle.
-
-    Each row emits one contribution struct per matching (sink, metric)
-    — built with a when() per def, compacted, exploded — then a single
-    groupBy(sink, metric, canonical-dims-string) aggregates everything.
-    Compared to one groupBy per metric def (13 jobs or a cached
-    intermediate), this is one map-side-combinable pass with no cache
-    and no interim IO: the shape that scales to 10^12 rows and is used
-    by the bench.  Dims are serialized as a sorted ``k=v`` string
-    (canonical — mirrors the reference's content-hash map grouping,
-    pdatautil/hash.go:100, without hashing).
-
-    Note: a variant grouping on raw dim-value columns (string built
-    post-aggregation) was tried and measured 2-3x SLOWER at local[32]
-    (wider structs + wider hash keys beat the per-row concat cost), so
-    the per-row canonical string stays.
-
-    Profiled again round 4 (bench's flat "aggregates" stage): over the
-    recomputed pipeline at local[32]/500k docs, route-only = 1.04 s,
-    this aggregate = 1.27 s — marginal cost ≈ 0.23 s; an int-def-index
-    variant (struct carries an int, sink/metric names broadcast-joined
-    back post-agg) measured 1.53 s, SLOWER — the two literal-string key
-    columns are effectively free in the hash aggregate while the extra
-    join is not.  The stage's apparent flatness across rounds is the
-    deliberate no-cache pipeline recompute, not aggregate cost.
-    """
+) -> list[Column]:
+    """One ``(sink, metric_name, dims, v)`` struct per (sink, metric
+    def), NULL where the row does not contribute to it."""
     copy_conds = copy_conds or {}
     entries = []
     for sink, defs in sink_metrics.items():
@@ -142,8 +116,55 @@ def connector_metrics_single_pass(
                     ),
                 )
             )
-    arr = F.filter(F.array(*entries), lambda x: x.isNotNull())
-    ex = df.select(F.col(ts_col).alias("_ts"), F.explode(arr).alias("e"))
+    return entries
+
+
+def connector_metrics_single_pass(
+    df: DataFrame,
+    sink_metrics: Mapping[str, Sequence[MetricDef]],
+    ts_col: str = "warc_ts",
+    route_col: str = "route",
+    copy_conds: Mapping[str, str] | None = None,
+) -> DataFrame:
+    """ALL metric defs of ALL sinks in ONE shuffle.
+
+    Each row emits one contribution struct per matching (sink, metric)
+    — built with a when() per def, exploded, NULLs dropped — then a single
+    groupBy(sink, metric, canonical-dims-string) aggregates everything.
+    Compared to one groupBy per metric def (13 jobs or a cached
+    intermediate), this is one map-side-combinable pass with no cache
+    and no interim IO: the shape that scales to 10^12 rows and is used
+    by the bench.  Dims are serialized as a sorted ``k=v`` string
+    (canonical — mirrors the reference's content-hash map grouping,
+    pdatautil/hash.go:100, without hashing).
+
+    Note: a variant grouping on raw dim-value columns (string built
+    post-aggregation) was tried and measured 2-3x SLOWER at local[32]
+    (wider structs + wider hash keys beat the per-row concat cost), so
+    the per-row canonical string stays.
+
+    Profiled again round 4 (bench's flat "aggregates" stage): over the
+    recomputed pipeline at local[32]/500k docs, route-only = 1.04 s,
+    this aggregate = 1.27 s — marginal cost ≈ 0.23 s; an int-def-index
+    variant (struct carries an int, sink/metric names broadcast-joined
+    back post-agg) measured 1.53 s, SLOWER — the two literal-string key
+    columns are effectively free in the hash aggregate while the extra
+    join is not.  The stage's apparent flatness across rounds is the
+    deliberate no-cache pipeline recompute, not aggregate cost.
+
+    The generator holds no higher-order function: the array is exploded
+    as built and NULL contributions are dropped by a plain filter after
+    it.  Compacting first with ``filter(array, x -> x IS NOT NULL)``
+    puts ``Generate`` in ``CodegenFallback``, so every row evaluates the
+    CASE/``struct``/``concat_ws`` entries interpreted; a JFR profile of
+    six warm flagship passes over 50,000 pages (local[4], 4-core host)
+    put 109 of 375 executor samples in that interpreted ``Generate``,
+    and none once it was codegen'd.  Same rows, same single Exchange;
+    ``test_plans`` pins ``*(n) Generate``.
+    """
+    entries = contributions(sink_metrics, route_col, copy_conds)
+    ex = df.select(F.col(ts_col).alias("_ts"), F.explode(F.array(*entries)).alias("e"))
+    ex = ex.filter(F.col("e").isNotNull())
     return (
         ex.groupBy(
             F.col("e.sink").alias("sink"),

@@ -86,9 +86,14 @@ def _apply_on_error(df: DataFrame, matched: Column, on_error: str) -> DataFrame:
 
 
 def first_line(col: str | Column) -> Column:
-    """The access-log record is line 1 of ``text`` (split is codegen'd)."""
+    """The access-log record is line 1 of ``text``: everything before
+    the first newline (the whole text when there is none, NULL for
+    NULL).  ``substring_index`` stops at that newline; ``split_part``
+    (the DuckDB twin's form, same result) splits the whole page with a
+    quoted regex into an array first: 55 of 375 executor samples in a
+    JFR profile of six warm flagship passes (local[4], 4-core host)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.split_part(c, F.lit("\n"), F.lit(1))
+    return F.substring_index(c, "\n", 1)
 
 
 def regex_parser(

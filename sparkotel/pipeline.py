@@ -70,7 +70,7 @@ def parse_stage(df: DataFrame, on_error: str = "send") -> DataFrame:
     df = E.attr_convert(df, "nbytes", "bigint")
     # all fixture offsets are +0000; parse the naive prefix so the
     # result is session-timezone-independent (same trick both engines)
-    df = df.withColumn("ts_naive", F.split_part(F.col("ts_str"), F.lit(" "), F.lit(1)))
+    df = df.withColumn("ts_naive", F.substring_index(F.col("ts_str"), " ", 1))
     df = PR.time_parser(df, "ts_naive", "%d/%b/%Y:%H:%M:%S", to="log_ts")
     df = df.drop("ts_naive")
     df = PR.severity_parser(df, "status")

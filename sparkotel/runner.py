@@ -48,9 +48,7 @@ def build_routed(spark: SparkSession, src: DataFrame, spec: PipelineSpec) -> Dat
     for f_ in spec.parse.int_fields:
         df = E.attr_convert(df, f_, "bigint" if f_ == "nbytes" else "int")
     if spec.parse.time_from:
-        df = df.withColumn(
-            "_ts_naive", F.split_part(F.col(spec.parse.time_from), F.lit(" "), F.lit(1))
-        )
+        df = df.withColumn("_ts_naive", F.substring_index(F.col(spec.parse.time_from), " ", 1))
         df = PR.time_parser(df, "_ts_naive", spec.parse.time_layout, to="log_ts").drop("_ts_naive")
     if spec.parse.severity_from:
         df = PR.severity_parser(

@@ -55,6 +55,93 @@ def test_on_error_modes(spark):
     assert drop.count() == 1
 
 
+_LOG_LINE = '10.0.0.1 - alice [15/Mar/2024:00:00:00 +0000] "GET /a HTTP/1.1" 200 512'
+
+
+def test_first_line_parse_matches_duck_twin_on_degenerate_rows(spark):
+    """``regex_parser``'s first-line cut (``substring_index``) and the
+    DuckDB twin's ``split_part(text, chr(10), 1)`` give the same rows on
+    empty, newline-only, CRLF, very long and NULL text.  DuckDB's
+    ``split_part(NULL, ...)`` is ``''`` where Spark's cut is NULL; both
+    land in ``_error``.  The cut equals ``split_part`` in Spark too, for
+    the newline and the space (the naive-timestamp cut) delimiters."""
+    import duckdb
+
+    from sparkotel import pages as P
+    from sparkotel.parity import duck_rows, spark_rows
+
+    texts = [
+        "", "\n", "\n" + _LOG_LINE, _LOG_LINE + "\r\nx", _LOG_LINE + " " + "x" * 10_000,
+        _LOG_LINE + "\n" + "x" * 10_000, "ü " + _LOG_LINE, None,
+    ]
+    rows = list(enumerate(texts))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO docs VALUES (?, ?)", rows)
+    pat = P.LOG_PATTERN
+    groups = ",\n".join(
+        f"CASE WHEN _m THEN regexp_extract(_line, '{pat}', {i + 1}) END AS {g}"
+        for i, g in enumerate(P.LOG_GROUPS)
+    )
+    twin = f"""
+      SELECT doc_id, text, NOT _m AS _error, {groups}
+      FROM (SELECT doc_id, text, split_part(text, chr(10), 1) AS _line,
+                   regexp_matches(split_part(text, chr(10), 1), '{pat}') AS _m
+            FROM docs)"""
+    out = PR.regex_parser(df, P.LOG_PATTERN, P.LOG_GROUPS)
+    assert spark_rows(out) == duck_rows(con, twin)
+    errors = {r["doc_id"]: r["_error"] for r in out.collect()}
+    assert errors == {0: True, 1: True, 2: True, 3: False, 4: False, 5: False, 6: True, 7: True}
+    for d in ("\n", " "):
+        cut = spark_rows(df.select("doc_id", F.substring_index("text", d, 1).alias("c")))
+        assert cut == spark_rows(
+            df.select("doc_id", F.split_part("text", F.lit(d), F.lit(1)).alias("c"))
+        )
+
+
+def test_single_pass_contributions_match_compacted_explode(spark):
+    """Exploding the contribution array as built and filtering NULLs
+    after it gives the rows of the old ``explode(filter(array(...),
+    x -> x IS NOT NULL))`` form: a row that fires no metric def, one that
+    fires all seven, one with NULL dims (only the defaulted dim fires)."""
+    import datetime as dt
+
+    from sparkotel.parity import spark_rows
+    from sparkotel.pipeline import SINK_METRICS
+
+    ts = dt.datetime(2024, 3, 15)
+    df = spark.createDataFrame(
+        [
+            (ts, "none", False, "FR", 200, 100, "h1", "English", "bob"),
+            (ts + dt.timedelta(seconds=1), "other", True, "DE", 500, 5000, "h2", "German", "eve"),
+            (ts + dt.timedelta(seconds=2), "other", True, None, None, None, None, None, None),
+        ],
+        "warc_ts timestamp, route string, fan_out boolean, geo_country string,"
+        " status int, nbytes bigint, host string, lang_name string, user string",
+    )
+
+    def compacted(copy_conds):
+        entries = A.contributions(SINK_METRICS, "route", copy_conds)
+        arr = F.filter(F.array(*entries), lambda x: x.isNotNull())
+        ex = df.select(F.col("warc_ts").alias("_ts"), F.explode(arr).alias("e"))
+        return ex.groupBy(
+            F.col("e.sink").alias("sink"),
+            F.col("e.metric_name").alias("metric_name"),
+            F.col("e.dims").alias("dims"),
+        ).agg(
+            F.sum("e.v").alias("value"),
+            F.min("_ts").alias("start_ts"),
+            F.max("_ts").alias("end_ts"),
+        )
+
+    fan_out = {s: "fan_out" for s in SINK_METRICS}
+    for copy_conds, n_groups in ((fan_out, 8), ({"de": "geo_country = 'DE'"}, 5)):
+        got = A.connector_metrics_single_pass(df, SINK_METRICS, copy_conds=copy_conds)
+        want = spark_rows(compacted(copy_conds))
+        assert spark_rows(got) == want and len(want) == n_groups
+
+
 def test_attraction_ordering(spark, logs):
     out = E.apply_actions(
         logs,

@@ -6,6 +6,7 @@ joins, shuffles on the parse path) fail CI instead of surfacing as a
 from __future__ import annotations
 
 import io
+import re
 from contextlib import redirect_stdout
 
 from conftest import SF_DIR
@@ -74,6 +75,34 @@ def test_single_pass_agg_one_shuffle(spark):
         and "Broadcast" not in l
     )
     assert n_shuffle == 1, plan
+
+
+def test_single_pass_agg_generate_is_codegend(spark):
+    """The contribution explode runs inside a whole-stage-codegen stage
+    (``*(n) Generate``): its generator holds no higher-order function,
+    which would put ``Generate`` in ``CodegenFallback`` and evaluate
+    every contribution entry interpreted."""
+    from sparkotel.operators.aggregate import connector_metrics_single_pass
+
+    out = PL.build(spark, SF_DIR)
+    m = connector_metrics_single_pass(
+        out["routed"], PL.SINK_METRICS, copy_conds={"de": "geo_country = 'DE'"}
+    )
+    m.collect()
+    plan = m._jdf.queryExecution().executedPlan().toString()
+    generates = [l for l in plan.splitlines() if "Generate explode(" in l]
+    assert generates, plan
+    assert any(re.search(r"\*\(\d+\) Generate explode\(", l) for l in generates), plan
+    assert not any("lambdafunction" in l for l in generates), plan
+
+
+def test_parse_first_line_cut_is_substring_index(spark):
+    """``first_line`` and the naive-timestamp cut stop at the first
+    delimiter (``substring_index``); ``split_part`` would split the whole
+    page into an array first (``stringsplitsql``)."""
+    plan = plan_of(PL.parse_stage(P.pages(spark, SF_DIR).drop("html"))).lower()
+    assert "substring_index" in plan
+    assert "stringsplitsql" not in plan
 
 
 def _count_shuffles(plan: str) -> int:
