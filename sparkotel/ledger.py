@@ -10,13 +10,14 @@ Batch-Spark design (SURVEY §7.4):
 - the input is split into P deterministic buckets:
   ``bucket = pmod(xxhash64(url), P)`` — stable across runs and cluster
   sizes (the fingerprint analogue);
-- the job processes buckets in batches; after a bucket's sink writes
-  commit, one ledger row ``(bucket, stage, rows, ts)`` is appended
-  (parquet append — each commit is its own file, so a crash mid-append
-  leaves either a complete row-group or nothing);
-- on restart, committed buckets are read back and the input is
-  filtered to the remainder (an anti-join that Catalyst folds into a
-  scan-side filter because the committed set is a small broadcast);
+- after a bucket's sink write commits, one ledger row
+  ``(bucket, stage, rows, ts)`` is appended (parquet append — each
+  commit is its own file, so a crash mid-append leaves either a
+  complete row-group or nothing); ``runner.run`` is the loop that
+  writes one bucket per job and commits the row count it observed on
+  that write;
+- on restart, committed buckets are read back and only the remaining
+  buckets are written;
 - sink writes are idempotent per bucket (dynamic partition overwrite on
   the bucket column), so a bucket killed mid-write is safely rewritten.
 
@@ -78,76 +79,21 @@ def commit_bucket(
     ).coalesce(1).write.mode("append").parquet(ledger_path)
 
 
-def run_resumable(
-    spark: SparkSession,
-    df: DataFrame,
-    out_path: str,
-    ledger_path: str,
-    stage: str = "sink",
-    n_buckets: int = 16,
-    batch_size: int = 4,
-    fail_after: int | None = None,
-) -> int:
-    """Process buckets in batches with per-batch commit.
-
-    ``fail_after`` aborts after N committed buckets (test hook for the
-    kill/resume scenario).  Returns the number of buckets committed in
-    THIS run.  Output is partitioned by bucket; dynamic partition
-    overwrite keeps half-written buckets safe to rewrite.
-    """
-    df = with_bucket(df, n_buckets=n_buckets)
-    done = committed_buckets(spark, ledger_path, stage)
-    todo = [b for b in range(n_buckets) if b not in done]
-    committed = 0
-    for i in range(0, len(todo), batch_size):
-        batch = todo[i : i + batch_size]
-        part = df.filter(F.col("bucket").isin(batch))
-        (
-            part.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(out_path)
-        )
-        # per-bucket row counts from the files just written: partition
-        # pruning limits the scan to this batch's directories and a
-        # no-column count(*) is satisfied from parquet footers, so this
-        # is metadata-cheap (vs. re-running the whole pipeline with
-        # part.count(), which also mis-attributed the batch total to
-        # every bucket in the batch).
-        counts = {
-            r["bucket"]: r["n"]
-            for r in spark.read.parquet(out_path)
-            .filter(F.col("bucket").isin(batch))
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        for b in batch:
-            commit_bucket(spark, ledger_path, b, stage, counts.get(b, 0))
-            committed += 1
-            if fail_after is not None and committed >= fail_after:
-                return committed
-    return committed
-
-
-def stage_metrics(
-    frames: dict[str, DataFrame], error_col: str = "_error", by_bucket: bool = False
-) -> DataFrame:
-    """Lineage table: rows in/out/errors per stage — and per partition
-    bucket when ``by_bucket`` (the obsreport analogue, per-partition as
-    the north rule requires; frames lacking a bucket column report as
-    bucket -1)."""
+def stage_metrics(frames: dict[str, DataFrame]) -> DataFrame:
+    """Lineage table: rows in/out/``_error`` rows per stage and partition
+    bucket (the obsreport analogue, per-partition as the north rule
+    requires; frames lacking a bucket column report as bucket -1)."""
     out = None
     for stage, df in frames.items():
-        has_err = error_col in df.columns
-        if by_bucket and "bucket" in df.columns:
+        has_err = "_error" in df.columns
+        if "bucket" in df.columns:
             grouped = df.groupBy(F.col("bucket"))
         else:
             grouped = df.groupBy(F.lit(-1).alias("bucket"))
         m = grouped.agg(
             F.count(F.lit(1)).alias("rows"),
             (
-                F.sum(F.col(error_col).cast("int")) if has_err else F.lit(0)
+                F.sum(F.col("_error").cast("int")) if has_err else F.lit(0)
             ).alias("errors"),
         ).withColumn("stage", F.lit(stage))
         out = m if out is None else out.unionByName(m)

@@ -519,7 +519,8 @@ _SPANS_SQL = (
     "  ts + to_microseconds(TRY_CAST(round(value * 1000, 0) AS BIGINT)) AS end_ts,"
     "  CASE event_type WHEN 'error' THEN 2 WHEN 'purchase' THEN 1 ELSE 0 END AS status_code,"
     "  event_type,"
-    "  CAST(json_extract(props, '$.k') AS BIGINT) AS k"
+    "  TRY_CAST(json_extract_string(CASE WHEN json_valid(props) THEN props END, '$.k')"
+    "   AS BIGINT) AS k"
     " FROM events)"
 )
 
@@ -560,7 +561,7 @@ def _spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .alias("status_code"),
         F.col("event_type"),
-        F.get_json_object("props", "$.k").cast("long").alias("k"),
+        F.get_json_object("props", "$.k").try_cast("long").alias("k"),
     )
 
 

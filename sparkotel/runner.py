@@ -10,21 +10,24 @@ Usage (cluster):
         --spec tests/fixtures/pipeline_m1.json \
         --input /data/pages --output /data/out
 
-At 10^12 rows the shape holds: one streaming pass (scan → codegen'd
-parse/enrich projections → broadcast joins → first-match route) into a
-bucket+route-partitioned write; aggregates re-read the pruned columns
-of the materialized sink table.
+Each pending bucket is one write job (scan → codegen'd parse/enrich
+projections → broadcast joins → first-match route → bucket filter) into
+the bucket+route-partitioned sink, and its row count is observed on
+that write, so committing it runs no second job.  The bucket is a hash
+of the url, which the scan cannot prune on, so a run reads the input
+once per pending bucket.  Aggregates re-read the pruned columns of the
+materialized sink table.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sparkotel import ledger as L
 from sparkotel import pages as P
 from sparkotel.config import PipelineSpec
-from sparkotel.expr import apply_statements
+from sparkotel.expr import apply_statements, compile_condition
 from sparkotel.operators import enrich as E
 from sparkotel.operators import parse as PR
 from sparkotel.operators.aggregate import MetricDef, connector_metric
@@ -91,14 +94,15 @@ def run(
     todo = [b for b in range(spec.n_buckets) if b not in done]
     committed = 0
     for b in todo:
-        part = routed.filter(F.col("bucket") == b)
+        obs = Observation()
+        part = routed.filter(F.col("bucket") == b).observe(obs, F.count(F.lit(1)).alias("rows"))
         (
             part.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket", "route")
             .parquet(f"{output}/routed")
         )
-        L.commit_bucket(spark, ledger_path, b, "routed", part.count())
+        L.commit_bucket(spark, ledger_path, b, "routed", obs.get["rows"])
         committed += 1
         if fail_after is not None and committed >= fail_after:
             return {"committed": committed, "resumed_from": len(done), "complete": False}
@@ -109,8 +113,6 @@ def run(
     metric_frames = []
     for sink, defs in spec.metrics.items():
         if sink in copy_conds:
-            from sparkotel.expr import compile_condition
-
             sdf = back.filter(compile_condition(back, copy_conds[sink]))
         else:
             sdf = back.filter(F.col("route") == sink)
@@ -127,7 +129,7 @@ def run(
             u = u.unionByName(a, allowMissingColumns=True)
         u.write.mode("overwrite").parquet(f"{output}/metrics")
 
-    lineage = L.stage_metrics({"source": src, "routed": back}, by_bucket=True)
+    lineage = L.stage_metrics({"source": src, "routed": back})
     lineage.write.mode("overwrite").parquet(f"{output}/lineage")
     return {
         "committed": committed,

@@ -3,9 +3,12 @@
 from __future__ import annotations
 
 import os
+from dataclasses import replace
+from urllib.parse import urlparse
 
 from conftest import SF_DIR
 
+from sparkotel import ledger as L
 from sparkotel import pages as P
 from sparkotel.config import PipelineSpec
 from sparkotel.runner import run
@@ -28,6 +31,7 @@ def test_runner_kill_resume(spark, tmp_path):
 
     s1 = run(spark, src, spec, out, fail_after=3)
     assert s1 == {"committed": 3, "resumed_from": 0, "complete": False}
+    assert len(L.committed_buckets(spark, f"{out}/_ledger", "routed")) == 3
 
     s2 = run(spark, src, spec, out)
     assert s2["complete"] and s2["resumed_from"] == 3 and s2["committed"] == 5
@@ -69,6 +73,36 @@ def test_runner_kill_resume(spark, tmp_path):
     # transform statement applied (host_hash only on parsed rows)
     ok = routed.filter("NOT _error").limit(5).collect()
     assert all(len(r["host_hash"]) == 64 for r in ok)
+
+    # the ledger's `rows` is each bucket's own count, as written
+    ledger_rows = {
+        r["bucket"]: r["rows"]
+        for r in spark.read.schema(L.LEDGER_SCHEMA).parquet(f"{out}/_ledger").collect()
+    }
+    written = {r["bucket"]: r["count"] for r in routed.groupBy("bucket").count().collect()}
+    assert ledger_rows == {b: written.get(b, 0) for b in range(spec.n_buckets)}
+
+
+def test_runner_never_counts_its_source(spark, tmp_path, monkeypatch):
+    """Each bucket's ledger rows come from its own write: every frame
+    the runner counts reads files it wrote, never the input pages."""
+    spec = replace(PipelineSpec.from_json(FIXTURE), n_buckets=2)
+    src = P.pages(spark, SF_DIR).drop("html")
+    out = str(tmp_path / "out")
+    cls = type(src)
+    counted = []
+    real_count = cls.count
+
+    def spy(df):
+        counted.append(df.inputFiles())
+        return real_count(df)
+
+    monkeypatch.setattr(cls, "count", spy)
+    assert run(spark, src, spec, out)["complete"]
+    monkeypatch.undo()
+
+    files = [urlparse(f).path for fs in counted for f in fs]
+    assert files and all(f.startswith(out + "/") for f in files), files
 
 
 def test_correctness_window_is_oracle_checked():

@@ -20,42 +20,6 @@ from sparkotel.parity import duck_rows, spark_rows
 
 # -- ledger / resume ----------------------------------------------------------
 
-def test_resume_no_duplicates(spark, tmp_path):
-    """FIXTURES §5: kill after N committed buckets, rerun, assert no
-    duplicate urls and output equals a clean single run."""
-    df = P.pages(spark, SF_DIR).select("url", "host", "doc_id")
-    out = str(tmp_path / "out")
-    led = str(tmp_path / "ledger")
-
-    done = L.run_resumable(spark, df, out, led, n_buckets=8, batch_size=2, fail_after=3)
-    assert done == 3
-    assert len(L.committed_buckets(spark, led, "sink")) == 3
-
-    done2 = L.run_resumable(spark, df, out, led, n_buckets=8, batch_size=2)
-    assert done2 == 5  # only the remainder
-
-    got = spark.read.parquet(out)
-    n_total = df.count()
-    assert got.count() == n_total
-    assert got.select("url").distinct().count() == n_total
-    # equals a clean run
-    clean = str(tmp_path / "clean")
-    L.run_resumable(spark, df, clean, str(tmp_path / "ledger2"), n_buckets=8)
-    a = sorted([r["url"] for r in got.collect()])
-    b = sorted([r["url"] for r in spark.read.parquet(clean).collect()])
-    assert a == b
-    # ledger `rows` is each bucket's OWN count, not the batch total
-    true_counts = {
-        r["bucket"]: r["n"]
-        for r in got.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    ledger_rows = {
-        r["bucket"]: r["rows"]
-        for r in spark.read.schema(L.LEDGER_SCHEMA).parquet(led).collect()
-    }
-    assert ledger_rows == {b: true_counts.get(b, 0) for b in range(8)}
-
-
 def test_bucket_stability(spark):
     """bucket assignment is a pure function of url — stable across runs
     and parallelism (the fingerprint analogue)."""

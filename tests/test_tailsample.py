@@ -6,8 +6,14 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
+import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from conftest import SF_DIR
 
+from sparkotel import pages as P
+from sparkotel import registry as R
 from sparkotel.operators.tailsample import (
     DEFAULT_HASH_SALT,
     TailPolicy,
@@ -16,6 +22,7 @@ from sparkotel.operators.tailsample import (
     sampled_spans,
     tail_sample,
 )
+from sparkotel.parity import duck_rows, spark_rows
 
 T0 = datetime(2024, 1, 1, 0, 0, 0)
 
@@ -198,3 +205,23 @@ def test_sampled_spans_semi_join(spark):
     out = sampled_spans(spans, dec)
     got = sorted((r["trace_id"], r["span_id"]) for r in out.collect())
     assert got == [("A", 1), ("A", 2)]  # whole trace released, B withheld
+
+
+def test_span_k_matches_duck_twin_on_degenerate_props(spark, tmp_path):
+    """The registry's span fixture reads ``k`` from the event's JSON
+    props: NULL, empty, malformed, non-integer and array props give a
+    NULL ``k`` on both engines instead of a cast or JSON error."""
+    props = [None, "", "not json", '{"k": true}', "[1,2]", '{"k": 3}', '{"k": "7"}']
+    ev = pq.read_table(f"{SF_DIR}/events.parquet").slice(0, len(props))
+    ev = ev.set_column(ev.schema.get_field_index("props"), "props", pa.array(props, pa.string()))
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(ev, path)
+    try:
+        got = spark_rows(R._spans(spark, str(tmp_path)).select("span_id", "k"))
+    finally:
+        P.load_tables(spark, SF_DIR, ["events"])
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM '{path}'")
+    assert got == duck_rows(con, f"WITH {R._SPANS_SQL} SELECT span_id, k FROM spans")
+    ids = ev.column("event_id").to_pylist()
+    assert {sid: k for k, sid in got} == dict(zip(ids, [None] * 5 + [3, 7]))

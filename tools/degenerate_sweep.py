@@ -26,7 +26,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-EXPECTED_FAILURES = {"s2m_histogram", "s2m_exp_histogram"}
+EXPECTED_FAILURES = {"s2m_gauge_last", "s2m_histogram", "s2m_exp_histogram"}
 
 
 def build_fixture(src: str, dst: str) -> None:
@@ -117,7 +117,9 @@ def main() -> int:
     qs = mod.queries()
     for i, (name, fn) in enumerate(qs.items()):
         try:
-            fn(spark, dst).count()
+            # collect, not count: under count() Catalyst prunes the
+            # projections a degenerate row would crash
+            fn(spark, dst).collect()
         except Exception as e:  # noqa: BLE001 — the sweep reports, not raises
             crashed.append(name)
             print(f"[{i + 1}/{len(qs)}] {name} CRASH: {str(e).splitlines()[0][:140]}")
