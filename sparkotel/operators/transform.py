@@ -95,9 +95,10 @@ def flatten_map(df: DataFrame, outer: str, inner_key: str) -> DataFrame:
 
 
 def assign_keys(df: DataFrame, arr_col: str, keys: Sequence[str]) -> DataFrame:
-    """name positional list items (assignkeys/transformer.go:30)."""
+    """name positional list items (assignkeys/transformer.go:30); a key
+    past the end of the list is NULL."""
     for i, k in enumerate(keys):
-        df = df.withColumn(k, F.col(arr_col).getItem(i))
+        df = df.withColumn(k, F.try_element_at(F.col(arr_col), F.lit(i + 1)))
     return df.drop(arr_col)
 
 

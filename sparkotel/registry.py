@@ -9,8 +9,10 @@ compare hashes values under sorted column names).
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -153,7 +155,29 @@ def _agg_sql(src_cond: str, metric: str, dims: str, group: str, extra: str = "")
     )
 
 
+def _verdict_rounds() -> list[dict[str, dict]]:
+    """The driver's ``CORRECTNESS_r*.json`` verdicts next to the package,
+    oldest round first; none (e.g. from a zip) gives ``[]``."""
+    root = Path(__file__).resolve().parent.parent
+    return [json.loads(p.read_text()) for p in sorted(root.glob("CORRECTNESS_r*.json"))]
+
+
+def stalest_first(names: list[str], rounds: list[dict[str, dict]]) -> list[str]:
+    """``names`` by the newest round in which each was green (rows, schema
+    and hash match, no error); never-green first, ties in ``names`` order.
+    The driver checks the first 50, so its evidence goes where it is oldest."""
+
+    def green(v: dict | None) -> bool:
+        return bool(v) and v["rows_match"] and v["schema_match"] and v["hash_match"] and v["err"] is None
+
+    def last_green(n: str) -> int:
+        return max((i for i, r in enumerate(rounds, 1) if green(r.get(n))), default=0)
+
+    return sorted(names, key=last_green)
+
+
 def build_registry() -> dict[str, Query]:
+    """Every query, in the order the driver checks them (``stalest_first``)."""
     q: dict[str, Query] = {}
 
     sel = lambda cols: ", ".join(f'"{c}"' if c == "user" else c for c in cols)  # noqa: E731
@@ -309,10 +333,6 @@ FROM res""",
         f"'page.count.matched_user' AS metric_name FROM routed "
         f'WHERE route = \'other\' AND "user" IS NOT NULL GROUP BY 1',
     )
-    # Training-data (dedup/ANN/multimodal/text) queries register FIRST so the
-    # flagship LLM-pipeline family falls inside the driver's 50-query
-    # correctness window; the long-tail operator queries (multi-round green)
-    # occupy the tail.  (VERDICT r2 item #1.)
     _add_trainingdata_queries(q)
     _add_tailsampling_queries(q)
     _add_otlpjson_queries(q)
@@ -320,188 +340,7 @@ FROM res""",
     _add_signaltometrics_queries(q)
     _add_spanproc_queries(q)
     _add_operator_queries(q)
-    # The driver's correctness pass records the FIRST 50 queries, in
-    # dict order.  The r4 window is explicit: (A) queries added or whose
-    # implementation changed this round, (B) queries that have never had
-    # a driver row in any round (VERDICT r3 item #2), (C) queries with
-    # only one green row, oldest evidence first, (D+E) the flagship
-    # training-data family and the big r3 processors for continued
-    # coverage.  Everything else moves behind the window — every one of
-    # those has at least one green driver row from r1-r3.
-    window = [
-        # The r5 window.  A: queries NEW this round — the geoip CIDR
-        # range arm and the fileexporter proto arm (their first driver
-        # rows), plus the three formerly rows-only queries whose
-        # golden-fixture / FNV-in-SQL oracles are new this round, so
-        # their first HASH-CHECKED rows land now.
-        "enrich_geoip_cidr",
-        "otlpproto_roundtrip",
-        "otlpproto_traces_roundtrip",
-        "otlpproto_metrics_roundtrip",
-        "otlpproto_exp_roundtrip",
-        "isolation_forest",
-        "drain_tree_templates",
-        "sampler_hash_seed",
-        # A (cont.): implementation changed this round — the unhinted
-        # decontaminate join-back, the zero-area image-patch guard, the
-        # cardinality-gated dynsample broadcast, the sub-second
-        # sessionize epoch, the schema rename validation, the shared
-        # otlpjson flat-rows builder (both roundtrips re-checked), and
-        # corpus_keep's optional precomputed-repetition parameter.
-        "decontaminate",
-        "multimodal_image_patches",
-        "dynamic_sampling",
-        # (sessionize_ip's slot: its epoch-cast change is re-verified
-        # by this session's sf0.01 gates and its r4 row is green; the
-        # slot goes to bpe_encode_stats, NEW in the final r5 session —
-        # a never-recorded query outranks a re-check in the last round)
-        "bpe_encode_stats",
-        "schema_migrate",
-        "otlpjson_roundtrip",
-        "corpus_keep_decision",
-        "text_repetition",
-        # A (late r5): implementation changed in the final session — the
-        # Arrow repetition engine feeds corpus_keep/corpus_prep_shards,
-        # try_divide landed in the quality/lang projections (text_quality,
-        # text_lang_id, corpus_stats, host_quality_filter), try_cast in
-        # the otlpjson numeric parse paths (the traces and exp-histogram
-        # round trips re-check those paths end to end; the logs/metrics/
-        # hist/summary round trips below already sit in the window), and
-        # cosine's try_divide touches the ANN family (ann_cosine_topk,
-        # ann_ivf_topk here; embedding_near_dup and ann_ivf_kmeans_topk
-        # below).  These displace seven unchanged single-green r4
-        # second-row pins (vocab_topk, doc_keywords, train_shards,
-        # stratified_sample, stanza_router_attrs, stanza_filter_ratio,
-        # group_by_attrs_promote).
-        "text_quality",
-        # (text_lang_id's pin — its try_divide path is equally covered
-        # by text_quality and corpus_stats — yields its slot to
-        # corpus_keep_neardup, the near-dup-aware corpus gate NEW in
-        # the final r5 session)
-        "corpus_keep_neardup",
-        # (corpus_stats' pin — it composes the same try_divide quality
-        # projection text_quality already pins — yields its slot to
-        # embedding_label_centroids, NEW in the final r5 session)
-        "embedding_label_centroids",
-        # (ann_cosine_topk's multi-green pin — unchanged code, and the
-        # recall query drives the same brute-force path internally —
-        # yields its slot to ann_ivf_recall, NEW in the final r5
-        # session)
-        "ann_ivf_recall",
-        "ann_ivf_topk",
-        "otlpjson_traces_roundtrip",
-        "otlpjson_exp_roundtrip",
-        "host_quality_filter",
-        # (corpus_prep_shards' pin — its components corpus_keep_decision
-        # and decontaminate are pinned above and corpus_keep_neardup
-        # keeps a composed-DAG row — yields its slot to bpe_train, the
-        # BPE tokenizer-induction trainer NEW in the final r5 session)
-        "bpe_train",
-        # A (late r5): explicit-histogram + summary marshal round trips
-        # (both formats) — first driver rows for the r5-new fileexporter
-        # arms.  They take the slots of single-green r4 queries whose
-        # code did not change (url_canonicalize, crawl_latest_snapshot,
-        # multimodal_audio_windows); corpus_stats later rotated back IN
-        # (the try_divide quality change touches it — see the final-
-        # session block above).
-        "otlpjson_hist_roundtrip",
-        "otlpproto_hist_roundtrip",
-        # (the summary round trips' r5-green pins — unchanged code —
-        # yield their slots to parse_regex, whose pipeline.build now runs
-        # the one native regex engine instead of the removed pandas arm,
-        # and to multimodal_frame_sample, whose zero-frame guard and
-        # zero-byte-video rows changed)
-        "parse_regex",
-        "multimodal_frame_sample",
-        # (unroll_words' second-row pin yields its slot to the unhinted
-        # cardinality_guardian join-back, changed this round)
-        "cardinality_guardian",
-        # (round_robin_shards' r4-upgrade pin — green r4, unchanged code
-        # — yields its slot to host_boilerplate_scrub, the CCNet-style
-        # host-scoped boilerplate line scrub NEW in the final r5 session)
-        "host_boilerplate_scrub",
-        # (dedup_ngram_jaccard's r4-green pin — unchanged code — yields
-        # its slot to semdedup, the SemDeDup semantic-dedup operator
-        # NEW in the final r5 session)
-        "semdedup",
-        # (dedup_clusters' r4-green pin — unchanged code — yields its
-        # slot to bm25_topk, the integer-exact BM25 retrieval query
-        # NEW in the final r5 session)
-        "bm25_topk",
-        # (text_scrub_spans' r4 single-green pin — unchanged code —
-        # yields its slot to warc_roundtrip, the WARC framing round
-        # trip NEW in the final r5 session)
-        "warc_roundtrip",
-        # (wet_route_counts' second-row pin yields its slot to
-        # span_pruning, whose execution shape changed in the final r5
-        # session — per-trace applyInPandas → batched mapInPandas)
-        "span_pruning",
-        # (html_extract_text's r4-green pin — unchanged code, and
-        # wet_route_counts covers the extraction chain end-to-end in
-        # earlier rounds — yields its slot to posting_lists, the
-        # inverted-index build NEW in the final r5 session)
-        "posting_lists",
-        # C: flagship pipeline + training-data family, every round
-        # (route_resource_ctx's multi-green pin — unchanged code —
-        # yields its slot to paragraph_dedup, the Dolma-style
-        # corpus-global paragraph dedup NEW in the final r5 session)
-        "paragraph_dedup",
-        # (text_pii_scrub's r4 single-green pin — unchanged code —
-        # yields its slot to source_mix_sample, the pretraining
-        # source-mixing sampler NEW in the final r5 session)
-        "source_mix_sample",
-        # (text_chunks' r4 single-green pin — unchanged code — yields
-        # its slot to dedup_normalized, the CCNet-normalized dedup key
-        # NEW in the final r5 session)
-        "dedup_normalized",
-        # (pack_sequences' r4 single-green pin — unchanged code, strong
-        # pytest — yields its slot to gopher_rules, the complete Gopher
-        # Table-A1 battery NEW in the final r5 session)
-        "gopher_rules",
-        # (embedding_near_dup's r4-green pin — unchanged code — yields
-        # its slot to c4_line_scrub, C4's line/page cleaning battery
-        # NEW in the final r5 session)
-        "c4_line_scrub",
-        "ann_ivf_kmeans_topk",
-        # (multimodal_sniff's flagship pin — multi-round green, unchanged
-        # code — yields its slot to text_line_dup, the Gopher duplicate-
-        # line/paragraph query NEW in the final r5 session)
-        "text_line_dup",
-        # (multimodal_features' flagship pin yields its slot to
-        # text_lm_score, the unigram-LM quality query NEW in the final
-        # r5 session — a new query needs its first driver row, and
-        # multimodal_features is multi-round green with unchanged code)
-        "text_lm_score",
-        # D: the big r4 processors keep a trailing slot (double-green
-        # r4 queries with unchanged code rotate out: the otlpjson exp
-        # family, s2m_*, metrics_transform*, span_name_ops,
-        # spanmetrics_exp_datapoint, agg_count_*)
-        # A (late r5): the rate_limiting / bytes_limiting / composite
-        # tail-sampling policies land this round — first driver rows
-        # (they displace double-green unchanged r4 queries:
-        # s2m_sum_duration, s2m_exp_histogram; text_quality later
-        # rotated back IN via the final-session try_divide block above).
-        "tailsample_rate_limit",
-        "tailsample_bytes_limit",
-        "tailsample_composite",
-        # (metrics_transform_labels' r4 single-green pin — unchanged
-        # code — yields its slot to dedup_simhash_pairs, the Manku
-        # banded SimHash pairing NEW in the final r5 session)
-        "dedup_simhash_pairs",
-        # (otlpjson_metrics_roundtrip's r4 double-green pin — unchanged
-        # code — yields its slot to url_blocklist_filter, the
-        # RefinedWeb URL filter NEW in the final r5 session)
-        "url_blocklist_filter",
-        # (span_name_ops' second-row pin yields its slot to the unhinted
-        # metric_start_time join, changed this round)
-        "metric_start_time",
-    ]
-    assert len(window) == 50, len(window)
-    unknown = set(window) - set(q)
-    if unknown:  # a typo here would silently drop driver coverage
-        raise KeyError(f"window lists name unknown queries: {sorted(unknown)}")
-    order = window + [n for n in q if n not in window]
-    return {n: q[n] for n in order}
+    return {n: q[n] for n in stalest_first(list(q), _verdict_rounds())}
 
 
 # ---------------------------------------------------------------------------
@@ -4861,19 +4700,22 @@ FROM (SELECT doc_id, unnest(range(0, nw)) AS u FROM w WHERE nw > 0) t""",
         return e.select(
             "vec_id",
             F.round("vec_norm", 6).alias("vec_norm"),
-            F.round(F.element_at("embedding", 1).cast("double"), 6).alias("e0"),
+            F.round(F.try_element_at("embedding", F.lit(1)).cast("double"), 6).alias("e0"),
             F.round("q_scale", 9).alias("q_scale"),
             F.aggregate("q_vec", F.lit(0).cast("long"), lambda a, x: a + x).alias("q_sum"),
             F.array_min("q_vec").alias("q_min"),
             F.array_max("q_vec").alias("q_max"),
         )
 
+    # sums fold as Spark's aggregate does: [] sums to 0 where DuckDB's
+    # list_sum gives NULL, and q_vec's NULL elements (a zero vector's
+    # x / 0 on both engines) make q_sum NULL where list_sum skips them
     q["embedding_prep"] = Query(
         embprep_q,
         """WITH n AS (
   SELECT vec_id, embedding,
-    sqrt(list_aggregate(list_transform(embedding,
-      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum')) AS vec_norm
+    sqrt(coalesce(list_sum(list_transform(embedding,
+      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), len(embedding) * 0.0)) AS vec_norm
   FROM embeddings),
 u AS (
   SELECT vec_id, vec_norm,
@@ -4889,7 +4731,7 @@ qv AS (
   FROM s)
 SELECT vec_id, round(vec_norm, 6) AS vec_norm, round(e0, 6) AS e0,
   round(q_scale, 9) AS q_scale,
-  CAST(list_aggregate(q_vec, 'sum') AS BIGINT) AS q_sum,
+  CAST(CASE WHEN list_count(q_vec) = len(q_vec) THEN coalesce(list_sum(q_vec), 0) END AS BIGINT) AS q_sum,
   list_min(q_vec) AS q_min, list_max(q_vec) AS q_max
 FROM qv""",
     )

@@ -14,9 +14,10 @@ Each pending bucket is one write job (scan → codegen'd parse/enrich
 projections → broadcast joins → first-match route → bucket filter) into
 the bucket+route-partitioned sink, and its row count is observed on
 that write, so committing it runs no second job.  The bucket is a hash
-of the url, which the scan cannot prune on, so a run reads the input
-once per pending bucket.  Aggregates re-read the pruned columns of the
-materialized sink table.
+of the url, which the scan cannot prune on, so a run with n pending
+buckets reads the input n + 1 times: once per bucket, and once more
+for the lineage ``source`` row (``L.stage_metrics``).  Aggregates
+re-read the pruned columns of the materialized sink table.
 """
 
 from __future__ import annotations

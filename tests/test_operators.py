@@ -279,6 +279,10 @@ def test_transformers_unit(spark, logs):
     assert r["k"] == "v" and r["h3"] == r["host"] and r["qq"] == "q"
     assert r["p1"] == "a" and r["p2"] == "b"
     assert "arr" not in df.columns and "h2" not in df.columns
+    # a key past the end of the list is NULL, as DuckDB's list[k]
+    short = logs.limit(1).withColumn("arr", F.split(F.col("host"), ","))
+    r = T.assign_keys(short, "arr", ["p1", "p2"]).first()
+    assert r["p1"] == r["host"] and r["p2"] is None
 
 
 def test_flatten_struct(spark):

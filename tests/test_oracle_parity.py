@@ -5,9 +5,13 @@ This is the same comparison the harness runs at sf0.01."""
 
 from __future__ import annotations
 
+import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from conftest import SF_DIR
 
+from sparkotel import pages as P
 from sparkotel.parity import duck_rows, spark_rows
 from sparkotel.registry import build_registry
 
@@ -35,3 +39,25 @@ def test_nan_and_null_match_across_engines(spark, duck):
 def test_null_double_differs_from_nan(spark, duck):
     got = spark_rows(spark.sql("SELECT CAST(NULL AS DOUBLE) AS x"))
     assert got != duck_rows(duck, "SELECT 'NaN'::DOUBLE AS x")
+
+
+def test_embedding_prep_matches_oracle_on_degenerate_vectors(spark, tmp_path):
+    """An empty, a NULL and a zero embedding give a NULL ``e0`` on both
+    engines, as DuckDB's ``unit[1]`` and ``x / 0`` do, instead of a Spark
+    array-index or divide-by-zero error."""
+    path = str(tmp_path / "embeddings.parquet")
+    pq.write_table(pa.table({
+        "vec_id": pa.array([0, 1, 2, 3], pa.int64()),
+        "embedding": pa.array([[], None, [0.0, 0.0], [3.0, 4.0]], pa.list_(pa.float32())),
+        "label": pa.array([0, 0, 0, 0], pa.int32()),
+    }), path)
+    q = REG["embedding_prep"]
+    try:
+        got = spark_rows(q.spark(spark, str(tmp_path)))
+    finally:
+        P.load_tables(spark, SF_DIR, ["embeddings"])
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW embeddings AS SELECT * FROM '{path}'")
+    assert got == duck_rows(con, q.oracle)
+    # columns sorted by name: e0 first, vec_id sixth
+    assert {r[5]: r[0] for r in got} == {0: None, 1: None, 2: None, 3: 0.6}

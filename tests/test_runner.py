@@ -11,6 +11,7 @@ from conftest import SF_DIR
 from sparkotel import ledger as L
 from sparkotel import pages as P
 from sparkotel.config import PipelineSpec
+from sparkotel.registry import _verdict_rounds, build_registry, stalest_first
 from sparkotel.runner import run
 
 FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "pipeline_m1.json")
@@ -106,19 +107,26 @@ def test_runner_never_counts_its_source(spark, tmp_path, monkeypatch):
 
 
 def test_correctness_window_is_oracle_checked():
-    """the driver records the first 50 registry queries; every one of
-    those slots must carry a DuckDB oracle, except an explicit
-    allowlist of rows-only-BY-DESIGN queries rotated in so they get at
-    least one (weaker, rows-only) driver row — VERDICT r3 item #2.  A
-    typo'd window entry still fails loudly."""
-    from sparkotel.registry import build_registry
-
-    # isolation_forest: model training, not SQL-expressible (iforest.py
-    # docstring); pytest carries determinism/recall evidence instead.
-    rows_only_by_design = {"isolation_forest"}
+    """the driver records the first 50 registry queries, stalest verdict
+    first; every one of them carries a DuckDB oracle, so each records a
+    hash-checked row."""
     reg = build_registry()
+    assert list(reg) == stalest_first(list(reg), _verdict_rounds())
     window = list(reg)[:50]
-    missing = [
-        n for n in window if reg[n].oracle is None and n not in rows_only_by_design
+    assert len(window) == 50
+    assert [n for n in window if reg[n].oracle is None] == []
+
+
+def test_stalest_first_order():
+    """queries never green sort first, then by the newest round each was
+    green in; a row with any mismatch or an error is not green; ties and
+    an empty verdict list keep the given order."""
+    ok = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+    rounds = [
+        {"a": ok, "b": ok, "c": ok, "d": ok},
+        {"b": ok, "c": {**ok, "hash_match": False}, "d": {**ok, "err": "boom"}},
+        {"a": ok, "e": {**ok, "rows_match": False}, "f": {**ok, "schema_match": False}},
     ]
-    assert not missing, missing
+    names = ["a", "b", "c", "d", "e", "f", "g"]
+    assert stalest_first(names, rounds) == ["e", "f", "g", "c", "d", "b", "a"]
+    assert stalest_first(names, []) == names

@@ -1,7 +1,8 @@
 """Simulate the driver: the ``entry()`` smoke, then the ``sparkotel.parity``
 compare of each named registry query at sf0.01.  Usage:
-``python tools/verify_subset.py q1 q2 ...`` (no args = all); exits 1 on a
-mismatch or an empty ``entry()``."""
+``python tools/verify_subset.py q1 q2 ...`` (no args = the first 50 of
+``queries()``, the driver's window; tests/test_oracle_parity.py checks
+all of them); exits 1 on a mismatch or an empty ``entry()``."""
 import os
 import sys
 
@@ -16,7 +17,7 @@ from sparkotel.session import get_spark  # noqa: E402
 
 def main() -> int:
     qs, osql = mod.queries(), mod.oracle_sql()
-    names = sys.argv[1:] or list(qs)
+    names = sys.argv[1:] or list(qs)[:50]
     unknown = [n for n in names if n not in qs]
     if unknown:
         print("unknown queries:", unknown)
