@@ -638,3 +638,73 @@ def test_all_default_point_survives_roundtrip(spark):
     )
     back = parse_otlp_proto_summaries(frame_messages(to_otlp_summaries_proto(s)))
     assert back.count() == 2  # the zero-value point did NOT vanish
+
+
+# SHA-256 over the sorted proto messages (joined by b"|") and the sorted
+# JSON lines (joined by "\n") of each fixture: a refactor of either
+# codec must keep every marshalled byte.
+MARSHAL_DIGESTS = {
+    "logs": (
+        "60b6c9182875e3e1dfdacd6d98fc22126d51fb58d1d4067dc092f0774f309d02",
+        "34c69a1c063694e358e23edf871e642a68fe081f47d53899aaed51c657f30b04",
+    ),
+    "traces": (
+        "a1f10b4ac29745cbe11074a467ccb2adf71cd4dc4d4d8a4ad0d12edaff1c9e02",
+        "b3fdad60d0714d04bef7dacc6b6d356238cf360373cb1c5010e663cf19b1721f",
+    ),
+    "metrics": (
+        "bcf2e1806ffd5b41a1e40dda55e14008b14a49b5045292bc7331569066a47f34",
+        "25e3c1ad59daee9f70f030cb8449a4e85ed5349686273ff43f68f21d73104bb2",
+    ),
+    "exp_histograms": (
+        "ac64ab99619eacc10f747d5b44950eff0c26828d64a58cb0e9dfb3c5de5ec453",
+        "268d95976d9205f58b460b975bcbbb1c554d510434640f506c78fb7a0ac93fa6",
+    ),
+    "histograms": (
+        "d30aede800dcff52ec14e72446a63861f68e85f78b35041e94d1af1c6339c5e6",
+        "971f279589a91e909e86eabe4dec9771a80c34b3a6b184f9615bca2a1b2bb79d",
+    ),
+    "summaries": (
+        "9d13642ac9eae5363eaaa2ea8e8b9dcb0e1a588986f1ba95cc8816854aa763d3",
+        "7887bd009958a81037dde1a067664a9d60e2b90f09de310e0ef804ede38918b7",
+    ),
+}
+
+_FIXTURES = {
+    "logs": lambda spark: _flat(spark, ROWS),
+    "traces": _spans,
+    "metrics": _points,
+    "exp_histograms": _exps,
+    "histograms": _hist_flat,
+    "summaries": _summ_flat,
+}
+
+
+@pytest.mark.parametrize("signal", sorted(MARSHAL_DIGESTS))
+def test_marshal_bytes_pinned(spark, signal):
+    """Every proto message and JSON line of the six fixtures, pinned by
+    digest; the traces arm also pins ``trace_proto_sizes``, which must
+    stay the marshal byte for byte."""
+    import hashlib
+
+    from sparkotel import otlpjson, otlpproto
+
+    df = _FIXTURES[signal](spark)
+    msgs = sorted(
+        bytes(r["msg"])
+        for r in getattr(otlpproto, f"to_otlp_{signal}_proto")(df).collect()
+    )
+    lines = sorted(
+        r["line"] for r in getattr(otlpjson, f"to_otlp_{signal}_json")(df).collect()
+    )
+    assert (
+        hashlib.sha256(b"|".join(msgs)).hexdigest(),
+        hashlib.sha256("\n".join(lines).encode()).hexdigest(),
+    ) == MARSHAL_DIGESTS[signal]
+    if signal == "traces":
+        sizes = otlpproto.trace_proto_sizes(df, with_arrival=True).collect()
+        assert sorted(tuple(r) for r in sizes) == [
+            ("", 52, None),
+            ("aa" * 16, 106, 1710500405000000),
+            ("ab" * 16, 143, 1710496801000000),
+        ]
