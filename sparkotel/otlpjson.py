@@ -100,6 +100,22 @@ def _kv_to_map(kvs: Column) -> Column:
     return F.coalesce(F.map_from_entries(entries), empty)
 
 
+def _unix_ts(field: str) -> Column:
+    """proto3-JSON int64 nanos string (e.g. ``"lr.timeUnixNano"``) → µs
+    ``timestamp_ntz``; absent or non-numeric → NULL.  ns → µs MUST be
+    integral division: float `/` loses the low bits of an epoch-nano
+    long (53-bit mantissa) and lands a µs off."""
+    return F.timestamp_micros(
+        F.expr(f"try_cast({field} as long) div 1000")
+    ).cast("timestamp_ntz")
+
+
+def _nanos(col: str) -> Column:
+    """µs timestamp column → proto3-JSON int64 nanos string; NULL stays
+    NULL, so ``to_json`` omits the field."""
+    return (F.unix_micros(F.col(col).cast("timestamp")) * 1000).cast("string")
+
+
 # ---------------------------------------------------------------------------
 # source: otlpjsonfilereceiver analogue
 # ---------------------------------------------------------------------------
@@ -125,15 +141,9 @@ def parse_otlp_logs(df: DataFrame, line_col: str = "line") -> DataFrame:
     sl = rl.select(F.col("rl.resource").alias("res"), F.explode("rl.scopeLogs").alias("sl"))
     rec = sl.select("res", F.col("sl.scope").alias("scope"), F.explode("sl.logRecords").alias("lr"))
     lr = F.col("lr")
-    # ns → µs MUST be integral division: float `/` loses the low bits of
-    # an epoch-nano long (53-bit mantissa) and lands a µs off.
-    rec = rec.withColumns({
-        "_tus": F.expr("try_cast(lr.timeUnixNano as long) div 1000"),
-        "_ous": F.expr("try_cast(lr.observedTimeUnixNano as long) div 1000"),
-    })
     return rec.select(
-        F.timestamp_micros(F.col("_tus")).cast("timestamp_ntz").alias("ts"),
-        F.timestamp_micros(F.col("_ous")).cast("timestamp_ntz").alias("observed_ts"),
+        _unix_ts("lr.timeUnixNano").alias("ts"),
+        _unix_ts("lr.observedTimeUnixNano").alias("observed_ts"),
         F.coalesce(lr.getField("severityNumber"), F.lit(0)).alias("severity_number"),
         F.coalesce(lr.getField("severityText"), F.lit("")).alias("severity_text"),
         F.coalesce(_any_as_string(lr.getField("body")), F.lit("")).alias("body"),
@@ -180,12 +190,8 @@ def to_otlp_logs_json(df: DataFrame) -> DataFrame:
     absent JSON fields are dropped by ``to_json`` like proto3.
     """
     rec = F.struct(
-        F.when(F.col("ts").isNotNull(),
-               (F.unix_micros(F.col("ts").cast("timestamp")) * 1000).cast("string"))
-        .alias("timeUnixNano"),
-        F.when(F.col("observed_ts").isNotNull(),
-               (F.unix_micros(F.col("observed_ts").cast("timestamp")) * 1000).cast("string"))
-        .alias("observedTimeUnixNano"),
+        _nanos("ts").alias("timeUnixNano"),
+        _nanos("observed_ts").alias("observedTimeUnixNano"),
         F.when(F.col("severity_number") != 0, F.col("severity_number")).alias("severityNumber"),
         F.when(F.col("severity_text") != "", F.col("severity_text")).alias("severityText"),
         F.struct(F.col("body").alias("stringValue")).alias("body"),
@@ -222,18 +228,7 @@ def to_otlp_logs_json(df: DataFrame) -> DataFrame:
     req = F.struct(
         F.array(
             F.struct(
-                F.struct(
-                    F.when(
-                        F.size("_res") > 0,
-                        F.transform(
-                            F.col("_res"),
-                            lambda e: F.struct(
-                                e.getField("key").alias("key"),
-                                F.struct(e.getField("value").alias("stringValue")).alias("value"),
-                            ),
-                        ),
-                    ).alias("attributes")
-                ).alias("resource"),
+                _res_struct(F.col("_res")).alias("resource"),
                 F.transform(
                     F.col("_scopes"),
                     lambda s: F.struct(
@@ -265,14 +260,8 @@ def to_otlp_traces_json(df: DataFrame) -> DataFrame:
         F.when(F.col("trace_state") != "", F.col("trace_state")).alias("traceState"),
         F.when(F.col("name") != "", F.col("name")).alias("name"),
         F.when(F.col("kind") != 0, F.col("kind")).alias("kind"),
-        F.when(
-            F.col("start_ts").isNotNull(),
-            (F.unix_micros(F.col("start_ts").cast("timestamp")) * 1000).cast("string"),
-        ).alias("startTimeUnixNano"),
-        F.when(
-            F.col("end_ts").isNotNull(),
-            (F.unix_micros(F.col("end_ts").cast("timestamp")) * 1000).cast("string"),
-        ).alias("endTimeUnixNano"),
+        _nanos("start_ts").alias("startTimeUnixNano"),
+        _nanos("end_ts").alias("endTimeUnixNano"),
         F.when(F.size(F.map_entries("attributes")) > 0, _str_kvs(F.col("attributes")))
         .alias("attributes"),
         F.when(
@@ -306,18 +295,7 @@ def to_otlp_traces_json(df: DataFrame) -> DataFrame:
     req = F.struct(
         F.array(
             F.struct(
-                F.struct(
-                    F.when(
-                        F.size("_res") > 0,
-                        F.transform(
-                            F.col("_res"),
-                            lambda e: F.struct(
-                                e.getField("key").alias("key"),
-                                F.struct(e.getField("value").alias("stringValue")).alias("value"),
-                            ),
-                        ),
-                    ).alias("attributes")
-                ).alias("resource"),
+                _res_struct(F.col("_res")).alias("resource"),
                 F.transform(
                     F.col("_scopes"),
                     lambda s: F.struct(
@@ -342,14 +320,8 @@ def to_otlp_metrics_json(df: DataFrame) -> DataFrame:
     the proto oneof at parse time — an asInt point round-trips to the
     same double, documented value-form divergence)."""
     dp = F.struct(
-        F.when(
-            F.col("start_ts").isNotNull(),
-            (F.unix_micros(F.col("start_ts").cast("timestamp")) * 1000).cast("string"),
-        ).alias("startTimeUnixNano"),
-        F.when(
-            F.col("ts").isNotNull(),
-            (F.unix_micros(F.col("ts").cast("timestamp")) * 1000).cast("string"),
-        ).alias("timeUnixNano"),
+        _nanos("start_ts").alias("startTimeUnixNano"),
+        _nanos("ts").alias("timeUnixNano"),
         F.col("value").alias("asDouble"),
         F.when(F.size(F.map_entries("attributes")) > 0, _str_kvs(F.col("attributes")))
         .alias("attributes"),
@@ -411,18 +383,7 @@ def to_otlp_metrics_json(df: DataFrame) -> DataFrame:
     req = F.struct(
         F.array(
             F.struct(
-                F.struct(
-                    F.when(
-                        F.size("_res") > 0,
-                        F.transform(
-                            F.col("_res"),
-                            lambda e: F.struct(
-                                e.getField("key").alias("key"),
-                                F.struct(e.getField("value").alias("stringValue")).alias("value"),
-                            ),
-                        ),
-                    ).alias("attributes")
-                ).alias("resource"),
+                _res_struct(F.col("_res")).alias("resource"),
                 F.transform(
                     F.col("_scopes"),
                     lambda s: F.struct(
@@ -461,14 +422,8 @@ def to_otlp_exp_histograms_json(df: DataFrame) -> DataFrame:
         )
 
     dp = F.struct(
-        F.when(
-            F.col("start_ts").isNotNull(),
-            (F.unix_micros(F.col("start_ts").cast("timestamp")) * 1000).cast("string"),
-        ).alias("startTimeUnixNano"),
-        F.when(
-            F.col("ts").isNotNull(),
-            (F.unix_micros(F.col("ts").cast("timestamp")) * 1000).cast("string"),
-        ).alias("timeUnixNano"),
+        _nanos("start_ts").alias("startTimeUnixNano"),
+        _nanos("ts").alias("timeUnixNano"),
         F.col("count").cast("string").alias("count"),
         F.col("sum").alias("sum"),
         F.col("min").alias("min"),
@@ -483,50 +438,21 @@ def to_otlp_exp_histograms_json(df: DataFrame) -> DataFrame:
         F.when(F.size(F.map_entries("attributes")) > 0, _str_kvs(F.col("attributes")))
         .alias("attributes"),
     )
-    sort_key = F.struct(
-        F.coalesce(F.unix_micros(F.col("ts").cast("timestamp")), F.lit(0)).alias("t"),
-        F.to_json(F.array_sort(F.map_entries("attributes"))).alias("a"),
-        dp.alias("dp"),
-    )
-    per_metric = df.groupBy(
-        F.array_sort(F.map_entries("resource")).alias("_res"),
-        F.col("metric_name").alias("_mn"),
-        F.col("aggregation_temporality").alias("_at"),
-    ).agg(F.array_sort(F.collect_list(sort_key)).alias("_keyed"))
-    metric_entry = F.struct(
-        F.col("_mn").alias("name"),
-        F.struct(
-            F.transform(F.col("_keyed"), lambda k: k.getField("dp")).alias(
-                "dataPoints"
-            ),
-            F.col("_at").alias("aggregationTemporality"),
-        ).alias("exponentialHistogram"),
-    )
-    per_res = per_metric.groupBy("_res").agg(
-        F.array_sort(F.collect_list(metric_entry)).alias("_metrics")
-    )
-    return per_res.select(F.to_json(_metrics_req(F.col("_res"))).alias("line"))
+    return _histograms_json(df, dp, "exponentialHistogram")
 
 
 def to_otlp_histograms_json(df: DataFrame) -> DataFrame:
     """Flat explicit-histogram point rows (parse_otlp_histograms shape)
     → one ``line`` per resource identity, each a full
     ExportMetricsServiceRequest — the fileexporter JSON-lines arm for
-    the ``histogram`` oneof (previously parse-only; closes the last
-    metrics-signal marshal gap together with ``to_otlp_summaries_json``).
-    Same shape rules as the exp-histogram arm: one unnamed scope,
-    metrics per (name, temporality), uint64 count/bucketCounts as
-    strings per proto3-JSON, optional sum/min/max omitted when NULL
-    (pdata presence), empty bucketCounts/explicitBounds omitted."""
+    the ``histogram`` oneof.  Same shape rules as the exp-histogram
+    arm: one unnamed scope, metrics per (name, temporality), uint64
+    count/bucketCounts as strings per proto3-JSON, optional
+    sum/min/max omitted when NULL (pdata presence), empty
+    bucketCounts/explicitBounds omitted."""
     dp = F.struct(
-        F.when(
-            F.col("start_ts").isNotNull(),
-            (F.unix_micros(F.col("start_ts").cast("timestamp")) * 1000).cast("string"),
-        ).alias("startTimeUnixNano"),
-        F.when(
-            F.col("ts").isNotNull(),
-            (F.unix_micros(F.col("ts").cast("timestamp")) * 1000).cast("string"),
-        ).alias("timeUnixNano"),
+        _nanos("start_ts").alias("startTimeUnixNano"),
+        _nanos("ts").alias("timeUnixNano"),
         F.col("count").cast("string").alias("count"),
         F.col("sum").alias("sum"),
         F.col("min").alias("min"),
@@ -541,29 +467,7 @@ def to_otlp_histograms_json(df: DataFrame) -> DataFrame:
         F.when(F.size(F.map_entries("attributes")) > 0, _str_kvs(F.col("attributes")))
         .alias("attributes"),
     )
-    sort_key = F.struct(
-        F.coalesce(F.unix_micros(F.col("ts").cast("timestamp")), F.lit(0)).alias("t"),
-        F.to_json(F.array_sort(F.map_entries("attributes"))).alias("a"),
-        dp.alias("dp"),
-    )
-    per_metric = df.groupBy(
-        F.array_sort(F.map_entries("resource")).alias("_res"),
-        F.col("metric_name").alias("_mn"),
-        F.col("aggregation_temporality").alias("_at"),
-    ).agg(F.array_sort(F.collect_list(sort_key)).alias("_keyed"))
-    metric_entry = F.struct(
-        F.col("_mn").alias("name"),
-        F.struct(
-            F.transform(F.col("_keyed"), lambda k: k.getField("dp")).alias(
-                "dataPoints"
-            ),
-            F.col("_at").alias("aggregationTemporality"),
-        ).alias("histogram"),
-    )
-    per_res = per_metric.groupBy("_res").agg(
-        F.array_sort(F.collect_list(metric_entry)).alias("_metrics")
-    )
-    return per_res.select(F.to_json(_metrics_req(F.col("_res"))).alias("line"))
+    return _histograms_json(df, dp, "histogram")
 
 
 def to_otlp_summaries_json(df: DataFrame) -> DataFrame:
@@ -576,14 +480,8 @@ def to_otlp_summaries_json(df: DataFrame) -> DataFrame:
     absent and a conforming reader takes 0.0; fixtures use non-zero
     sums so round trips stay exact."""
     dp = F.struct(
-        F.when(
-            F.col("start_ts").isNotNull(),
-            (F.unix_micros(F.col("start_ts").cast("timestamp")) * 1000).cast("string"),
-        ).alias("startTimeUnixNano"),
-        F.when(
-            F.col("ts").isNotNull(),
-            (F.unix_micros(F.col("ts").cast("timestamp")) * 1000).cast("string"),
-        ).alias("timeUnixNano"),
+        _nanos("start_ts").alias("startTimeUnixNano"),
+        _nanos("ts").alias("timeUnixNano"),
         F.col("count").cast("string").alias("count"),
         F.col("sum").alias("sum"),
         F.when(F.size("quantiles") > 0, F.col("quantiles")).alias("quantileValues"),
@@ -661,14 +559,36 @@ def _res_struct(res_entries) -> Column:
     )
 
 
-def _metrics_req(res_entries) -> Column:
-    """The single-resource, single-unnamed-scope request wrapper the
-    exp-histogram and explicit-histogram arms share (``_metrics`` in
-    scope)."""
-    return F.struct(
+def _histograms_json(df: DataFrame, dp: Column, arm: str) -> DataFrame:
+    """The exp-histogram and explicit-histogram marshal: points ``dp``
+    by (ts, attrs) under one Metric per (name, temporality) whose oneof
+    is ``arm``, all in one unnamed scope per resource."""
+    sort_key = F.struct(
+        F.coalesce(F.unix_micros(F.col("ts").cast("timestamp")), F.lit(0)).alias("t"),
+        F.to_json(F.array_sort(F.map_entries("attributes"))).alias("a"),
+        dp.alias("dp"),
+    )
+    per_metric = df.groupBy(
+        F.array_sort(F.map_entries("resource")).alias("_res"),
+        F.col("metric_name").alias("_mn"),
+        F.col("aggregation_temporality").alias("_at"),
+    ).agg(F.array_sort(F.collect_list(sort_key)).alias("_keyed"))
+    metric_entry = F.struct(
+        F.col("_mn").alias("name"),
+        F.struct(
+            F.transform(F.col("_keyed"), lambda k: k.getField("dp")).alias(
+                "dataPoints"
+            ),
+            F.col("_at").alias("aggregationTemporality"),
+        ).alias(arm),
+    )
+    per_res = per_metric.groupBy("_res").agg(
+        F.array_sort(F.collect_list(metric_entry)).alias("_metrics")
+    )
+    req = F.struct(
         F.array(
             F.struct(
-                _res_struct(res_entries).alias("resource"),
+                _res_struct(F.col("_res")).alias("resource"),
                 F.array(
                     F.struct(
                         F.struct(
@@ -680,6 +600,7 @@ def _metrics_req(res_entries) -> Column:
             )
         ).alias("resourceMetrics")
     )
+    return per_res.select(F.to_json(req).alias("line"))
 
 
 def write_otlp_json_sink(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -729,18 +650,14 @@ def parse_otlp_traces(df: DataFrame, line_col: str = "line") -> DataFrame:
     sl = rl.select(F.col("rs.resource").alias("res"), F.explode("rs.scopeSpans").alias("ss"))
     rec = sl.select("res", F.col("ss.scope").alias("scope"), F.explode("ss.spans").alias("sp"))
     sp = F.col("sp")
-    rec = rec.withColumns({
-        "_sus": F.expr("try_cast(sp.startTimeUnixNano as long) div 1000"),
-        "_eus": F.expr("try_cast(sp.endTimeUnixNano as long) div 1000"),
-    })
     return rec.select(
         F.coalesce(sp.getField("traceId"), F.lit("")).alias("trace_id"),
         F.coalesce(sp.getField("spanId"), F.lit("")).alias("span_id"),
         F.coalesce(sp.getField("parentSpanId"), F.lit("")).alias("parent_span_id"),
         F.coalesce(sp.getField("name"), F.lit("")).alias("name"),
         F.coalesce(sp.getField("kind"), F.lit(0)).alias("kind"),
-        F.timestamp_micros(F.col("_sus")).cast("timestamp_ntz").alias("start_ts"),
-        F.timestamp_micros(F.col("_eus")).cast("timestamp_ntz").alias("end_ts"),
+        _unix_ts("sp.startTimeUnixNano").alias("start_ts"),
+        _unix_ts("sp.endTimeUnixNano").alias("end_ts"),
         F.coalesce(sp.getField("status").getField("code"), F.lit(0)).alias("status_code"),
         F.coalesce(sp.getField("status").getField("message"), F.lit("")).alias("status_message"),
         F.coalesce(sp.getField("traceState"), F.lit("")).alias("trace_state"),
@@ -767,9 +684,7 @@ def parse_otlp_spanevents(df: DataFrame, line_col: str = "line") -> DataFrame:
     ev = F.col("ev")
     return rec.select(
         F.coalesce(ev.getField("name"), F.lit("")).alias("event_name"),
-        F.timestamp_micros(F.expr("try_cast(ev.timeUnixNano as long) div 1000"))
-        .cast("timestamp_ntz")
-        .alias("ts"),
+        _unix_ts("ev.timeUnixNano").alias("ts"),
         F.col("event_index"),
         _kv_to_map(ev.getField("attributes")).alias("attributes"),
         F.coalesce(sp.getField("traceId"), F.lit("")).alias("trace_id"),
@@ -859,10 +774,6 @@ def parse_otlp_metrics(df: DataFrame, line_col: str = "line") -> DataFrame:
         .select("*", F.explode("_dps").alias("dp"))
     )
     dp = F.col("dp")
-    rec = rec.withColumns({
-        "_sus": F.expr("try_cast(dp.startTimeUnixNano as long) div 1000"),
-        "_tus": F.expr("try_cast(dp.timeUnixNano as long) div 1000"),
-    })
     msum = F.col("m").getField("sum")
     return rec.select(
         F.col("m").getField("name").alias("metric_name"),
@@ -874,8 +785,8 @@ def parse_otlp_metrics(df: DataFrame, line_col: str = "line") -> DataFrame:
         F.when(F.col("_type") == "sum",
                F.coalesce(msum.getField("isMonotonic"), F.lit(False)))
         .otherwise(F.lit(False)).alias("is_monotonic"),
-        F.timestamp_micros(F.col("_sus")).cast("timestamp_ntz").alias("start_ts"),
-        F.timestamp_micros(F.col("_tus")).cast("timestamp_ntz").alias("ts"),
+        _unix_ts("dp.startTimeUnixNano").alias("start_ts"),
+        _unix_ts("dp.timeUnixNano").alias("ts"),
         F.coalesce(dp.getField("asDouble"), dp.getField("asInt").try_cast("double")).alias("value"),
         _kv_to_map(dp.getField("attributes")).alias("attributes"),
         _kv_to_map(F.col("res").getField("attributes")).alias("resource"),
@@ -892,25 +803,23 @@ def parse_otlp_histograms(df: DataFrame, line_col: str = "line") -> DataFrame:
         .select("*", F.explode(F.col("m").getField("histogram").getField("dataPoints")).alias("dp"))
     )
     dp = F.col("dp")
-    rec = rec.withColumns({
-        "_sus": F.expr("try_cast(dp.startTimeUnixNano as long) div 1000"),
-        "_tus": F.expr("try_cast(dp.timeUnixNano as long) div 1000"),
-    })
     return rec.select(
         F.col("m").getField("name").alias("metric_name"),
         F.coalesce(
             F.col("m").getField("histogram").getField("aggregationTemporality"), F.lit(0)
         ).alias("aggregation_temporality"),
-        F.timestamp_micros(F.col("_sus")).cast("timestamp_ntz").alias("start_ts"),
-        F.timestamp_micros(F.col("_tus")).cast("timestamp_ntz").alias("ts"),
+        _unix_ts("dp.startTimeUnixNano").alias("start_ts"),
+        _unix_ts("dp.timeUnixNano").alias("ts"),
         # count is a plain fixed64 (no presence bit): absent == 0, like
         # pdata — keeps the JSON and proto parse twins identical
         F.coalesce(dp.getField("count").try_cast("long"), F.lit(0)).alias("count"),
         dp.getField("sum").alias("sum"),
         dp.getField("min").alias("min"),
         dp.getField("max").alias("max"),
-        F.transform(dp.getField("bucketCounts"), lambda c: c.try_cast("long")).alias("bucket_counts"),
-        dp.getField("explicitBounds").alias("explicit_bounds"),
+        _longs(dp.getField("bucketCounts")).alias("bucket_counts"),
+        F.coalesce(
+            dp.getField("explicitBounds"), F.array().cast("array<double>")
+        ).alias("explicit_bounds"),
         _kv_to_map(dp.getField("attributes")).alias("attributes"),
         _kv_to_map(F.col("res").getField("attributes")).alias("resource"),
     )
@@ -942,23 +851,14 @@ def parse_otlp_exp_histograms(df: DataFrame, line_col: str = "line") -> DataFram
         )
     )
     dp = F.col("dp")
-    rec = rec.withColumns({
-        "_sus": F.expr("try_cast(dp.startTimeUnixNano as long) div 1000"),
-        "_tus": F.expr("try_cast(dp.timeUnixNano as long) div 1000"),
-    })
-    _counts = lambda half: F.coalesce(
-        F.transform(dp.getField(half).getField("bucketCounts"),
-                    lambda c: c.try_cast("long")),
-        F.array().cast("array<long>"),
-    )
     return rec.select(
         F.col("m").getField("name").alias("metric_name"),
         F.coalesce(
             F.col("m").getField("exponentialHistogram").getField("aggregationTemporality"),
             F.lit(0),
         ).alias("aggregation_temporality"),
-        F.timestamp_micros(F.col("_sus")).cast("timestamp_ntz").alias("start_ts"),
-        F.timestamp_micros(F.col("_tus")).cast("timestamp_ntz").alias("ts"),
+        _unix_ts("dp.startTimeUnixNano").alias("start_ts"),
+        _unix_ts("dp.timeUnixNano").alias("ts"),
         # plain fixed64 count: absent == 0 (sum/min/max are presence-
         # tracked optionals and stay NULL when absent)
         F.coalesce(dp.getField("count").try_cast("long"), F.lit(0)).alias("count"),
@@ -969,9 +869,9 @@ def parse_otlp_exp_histograms(df: DataFrame, line_col: str = "line") -> DataFram
         F.coalesce(dp.getField("zeroCount").try_cast("long"), F.lit(0)).alias("zero_count"),
         F.coalesce(dp.getField("zeroThreshold"), F.lit(0.0)).alias("zero_threshold"),
         F.coalesce(dp.getField("positive").getField("offset"), F.lit(0)).alias("positive_offset"),
-        _counts("positive").alias("positive_bucket_counts"),
+        _longs(dp.getField("positive").getField("bucketCounts")).alias("positive_bucket_counts"),
         F.coalesce(dp.getField("negative").getField("offset"), F.lit(0)).alias("negative_offset"),
-        _counts("negative").alias("negative_bucket_counts"),
+        _longs(dp.getField("negative").getField("bucketCounts")).alias("negative_bucket_counts"),
         _kv_to_map(dp.getField("attributes")).alias("attributes"),
         _kv_to_map(F.col("res").getField("attributes")).alias("resource"),
     )
@@ -993,24 +893,32 @@ def parse_otlp_summaries(df: DataFrame, line_col: str = "line") -> DataFrame:
         )
     )
     dp = F.col("dp")
-    rec = rec.withColumns({
-        "_sus": F.expr("try_cast(dp.startTimeUnixNano as long) div 1000"),
-        "_tus": F.expr("try_cast(dp.timeUnixNano as long) div 1000"),
-    })
     return rec.select(
         F.col("m").getField("name").alias("metric_name"),
         F.coalesce(F.col("m").getField("unit"), F.lit("")).alias("unit"),
-        F.timestamp_micros(F.col("_sus")).cast("timestamp_ntz").alias("start_ts"),
-        F.timestamp_micros(F.col("_tus")).cast("timestamp_ntz").alias("ts"),
+        _unix_ts("dp.startTimeUnixNano").alias("start_ts"),
+        _unix_ts("dp.timeUnixNano").alias("ts"),
         # SummaryDataPoint has NO presence-tracked fields: absent count
         # and sum are the zero values, like pdata (and like the proto
         # decode twin) — not NULL
         F.coalesce(dp.getField("count").try_cast("long"), F.lit(0)).alias("count"),
         F.coalesce(dp.getField("sum"), F.lit(0.0)).alias("sum"),
-        dp.getField("quantileValues").alias("quantiles"),
+        F.coalesce(
+            dp.getField("quantileValues"),
+            F.array().cast("array<struct<quantile:double,value:double>>"),
+        ).alias("quantiles"),
         _kv_to_map(dp.getField("attributes")).alias("attributes"),
         _kv_to_map(F.col("res").getField("attributes")).alias("resource"),
         F.coalesce(F.col("scope").getField("name"), F.lit("")).alias("scope_name"),
+    )
+
+
+def _longs(counts: Column) -> Column:
+    """proto3-JSON uint64 strings → longs; an absent repeated field is
+    the empty list, as in pdata and the proto decode twin."""
+    return F.coalesce(
+        F.transform(counts, lambda c: c.try_cast("long")),
+        F.array().cast("array<long>"),
     )
 
 

@@ -1,7 +1,10 @@
 """fileexporter proto arm: OTLP protobuf wire-format marshal for all
 three signals (logs LogsData, traces TracesData, metrics MetricsData
-number + exponential-histogram points), 4-byte big-endian length
-framing, and the unmarshal back.
+gauge/sum number, explicit-histogram, exponential-histogram and summary
+points), 4-byte big-endian length framing, and the unmarshal back.
+All three signals share one envelope, ``resource_X=1 {resource=1,
+scope_X=2 {scope=1, items=2}}``: ``_data``/``_scope`` write it and
+``_scoped`` walks it, so each signal only encodes and decodes its items.
 
 Reference semantics:
 - marshaller.go:20-44 — ``format: proto`` selects ``plog.ProtoMarshaler``,
@@ -17,13 +20,13 @@ definitions (opentelemetry/proto/logs/v1/logs.proto,
 common/v1/common.proto, resource/v1/resource.proto).  No protobuf
 runtime exists in this environment, so the encoder/decoder is a
 hand-rolled proto3 wire-format implementation of exactly the subset
-the engine's flat log rows carry (string-valued attributes, string
+the engine's flat rows carry (string-valued attributes, string log
 body) — zero-valued scalars are omitted like every conforming proto3
 encoder, including pdata's.
 
-Spark-first shape: one ``LogsData`` message per RESOURCE IDENTITY —
-the same batchperresourceattr grouping contract as the JSON marshal
-(``to_otlp_logs_json``) — so the only shuffle is the hash exchange on
+Spark-first shape: one ``{Logs,Traces,Metrics}Data`` message per
+RESOURCE IDENTITY — the same batchperresourceattr grouping contract as
+the JSON marshals (``to_otlp_*_json``) — so the only shuffle is the hash exchange on
 the resource key that the JSON path already pays.  Byte assembly is
 not SQL-expressible, so groups encode inside an Arrow-batched
 ``applyInPandas``; the LENGTH FRAMING, however, is a pure column
@@ -129,11 +132,11 @@ def _entries(col: str):
     return F.array_sort(F.map_entries(F.coalesce(F.col(col), F.create_map())))
 
 
-def _nn(col: str):
-    """NULL string group key → '' before the pandas groupby: pandas
-    drops NULL keys (dropna default), and on the wire an absent string
-    IS the zero value '' — same bytes, so the merge is lossless."""
-    return F.coalesce(F.col(col), F.lit(""))
+def _nn(col: str, zero=""):
+    """NULL group key → its proto3 zero value before the pandas groupby:
+    pandas drops NULL keys (dropna default), and on the wire an absent
+    scalar IS the zero value — same bytes, so the merge is lossless."""
+    return F.coalesce(F.col(col), F.lit(zero))
 
 
 def _i0(v) -> int:
@@ -159,6 +162,16 @@ _LOGS_FLAT_DDL = (
     "resource map<string,string>, scope_name string, scope_version string, "
     "trace_id string, span_id string, flags int, dropped_attributes_count int"
 )
+# The decoded zero row in DDL order: every field a record omits on the
+# wire keeps its proto3 zero value (timestamps NULL).  Its keys are the
+# frame's column list.  Rows share its empty containers, so decoders
+# replace them and never mutate them in place.
+_LOGS_ZERO = {
+    "ts": None, "observed_ts": None, "severity_number": 0,
+    "severity_text": "", "body": "", "attributes": {}, "resource": {},
+    "scope_name": "", "scope_version": "", "trace_id": "", "span_id": "",
+    "flags": 0, "dropped_attributes_count": 0,
+}
 
 
 def _encode_log_record(r) -> bytes:
@@ -193,6 +206,46 @@ def _encode_resource(entries) -> bytes:
     return bytes(out)
 
 
+def _scope(name: str, version: str, items) -> bytes:
+    """One Scope{Logs,Spans,Metrics} entry: scope=1, then each encoded
+    item as a list element of field 2 (log_records / spans / metrics).
+    Tagged as ``Resource*.scope_*=2``; an unnamed scope omits field 1."""
+    body = _f_msg(1, _encode_scope(name, version))
+    return _f_msg(2, body + b"".join(_f_msg_elem(2, it) for it in items))
+
+
+def _data(res_entries, scopes) -> bytes:
+    """``{Logs,Traces,Metrics}Data{resource_*=1{resource=1, scope_*=2}}``
+    for one resource identity; ``scopes`` are ``_scope`` outputs."""
+    return _f_msg(1, _f_msg(1, _encode_resource(res_entries)) + b"".join(scopes))
+
+
+def _points(g: pd.DataFrame, encode_point) -> bytes:
+    # every metric arm carries its points as data_points=1
+    return b"".join(_f_msg_elem(1, encode_point(r)) for r in g.to_dict("records"))
+
+
+def _by_resource(df: DataFrame, keys: dict, encode) -> DataFrame:
+    """The resource-grouped marshal every signal shares: one ``msg`` per
+    resource identity (batchperresourceattr), ``encode(pdf) -> bytes``
+    over that group's rows.  Adds the sorted ``_res``/``_attrs`` entries,
+    the ``_akey`` attribute sort key and the ``_rkey`` group key;
+    ``keys`` maps each grouping column the encoder reads to its proto3
+    zero value (see ``_nn``)."""
+    keyed = df.withColumns(
+        {
+            "_res": _entries("resource"),
+            "_attrs": _entries("attributes"),
+            "_akey": F.to_json(_entries("attributes")),
+            "_rkey": F.to_json(_entries("resource")),
+            **{c: _nn(c, zero) for c, zero in keys.items()},
+        }
+    )
+    return keyed.groupBy("_rkey").applyInPandas(
+        lambda pdf: pd.DataFrame({"msg": [encode(pdf)]}), "msg binary"
+    )
+
+
 def to_otlp_logs_proto(df: DataFrame) -> DataFrame:
     """Flat record rows (``parse_otlp_logs`` shape) → one ``msg`` binary
     per resource identity, each a full ``LogsData`` proto message.
@@ -201,34 +254,20 @@ def to_otlp_logs_proto(df: DataFrame) -> DataFrame:
     one message per resource (batchperresourceattr), scopes sorted by
     (name, version), records by (ts, span_id) — deterministic bytes.
     """
-    keyed = df.withColumns(
-        {
-            "_res": _entries("resource"),
-            "_attrs": _entries("attributes"),
-            "_rkey": F.to_json(_entries("resource")),
-            "scope_name": _nn("scope_name"),
-            "scope_version": _nn("scope_version"),
-        }
-    )
 
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
+    def encode(pdf: pd.DataFrame) -> bytes:
         pdf = pdf.sort_values(
             ["scope_name", "scope_version", "ts", "span_id"], kind="mergesort"
         )
-        res = _encode_resource(pdf.iloc[0]["_res"])
-        scope_logs = bytearray()
-        for (name, version), g in pdf.groupby(
-            ["scope_name", "scope_version"], sort=True
-        ):
-            body = bytearray(_f_msg(1, _encode_scope(name, version)))
-            for r in g.to_dict("records"):
-                body += _f_msg_elem(2, _encode_log_record(r))
-            scope_logs += _f_msg(2, bytes(body))  # ResourceLogs.scope_logs=2
-        rl = _f_msg(1, res) + bytes(scope_logs)  # ResourceLogs{resource=1,...}
-        msg = _f_msg(1, rl)  # LogsData{resource_logs=1}
-        return pd.DataFrame({"msg": [msg]})
+        scopes = [
+            _scope(name, version, map(_encode_log_record, g.to_dict("records")))
+            for (name, version), g in pdf.groupby(
+                ["scope_name", "scope_version"], sort=True
+            )
+        ]
+        return _data(pdf.iloc[0]["_res"], scopes)
 
-    return keyed.groupBy("_rkey").applyInPandas(encode, "msg binary")
+    return _by_resource(df, {"scope_name": "", "scope_version": ""}, encode)
 
 
 def frame_messages(df: DataFrame, msg_col: str = "msg") -> DataFrame:
@@ -332,79 +371,115 @@ def _dec_kvs(msgs: list[bytes]) -> dict[str, str]:
     return out
 
 
-def decode_logs_data(msg: bytes) -> list[dict]:
-    """One LogsData message → flat record dicts (parse_otlp_logs shape)."""
-    rows: list[dict] = []
-    for f_rl, _, rl in _fields(msg):
-        if f_rl != 1:
+def _ts(v: int) -> pd.Timestamp:
+    """fixed64 epoch nanos → the engine's µs-precision timestamp."""
+    return pd.Timestamp(v // 1000, unit="us")
+
+
+def _dbl(v: int) -> float:
+    """fixed64 wire bits → the double they encode."""
+    return struct.unpack("<d", struct.pack("<Q", v))[0]
+
+
+def _scoped(msg: bytes):
+    """Walk the envelope all three signals share — ``resource_*=1
+    {resource=1, scope_*=2 {scope=1 {name=1, version=2}, items=2}}`` —
+    yielding ``(resource attrs, scope name, scope version, item bytes)``
+    per item, in wire order."""
+    for f_r, _, rx in _fields(msg):
+        if f_r != 1:
             continue
         res_attrs: dict[str, str] = {}
         scope_msgs: list[bytes] = []
-        for f, _, v in _fields(rl):
+        for f, _, v in _fields(rx):
             if f == 1:  # Resource
                 res_attrs = _dec_kvs([kv for fn, _, kv in _fields(v) if fn == 1])
             elif f == 2:
                 scope_msgs.append(v)
-        for sl in scope_msgs:
-            scope_name = scope_version = ""
-            recs: list[bytes] = []
-            for f, _, v in _fields(sl):
+        for sx in scope_msgs:
+            name = version = ""
+            items: list[bytes] = []
+            for f, _, v in _fields(sx):
                 if f == 1:
                     for fn, _, sv in _fields(v):
                         if fn == 1:
-                            scope_name = sv.decode("utf-8")
+                            name = sv.decode("utf-8")
                         elif fn == 2:
-                            scope_version = sv.decode("utf-8")
+                            version = sv.decode("utf-8")
                 elif f == 2:
-                    recs.append(v)
-            for rec in recs:
-                r = {
-                    "ts": None,
-                    "observed_ts": None,
-                    "severity_number": 0,
-                    "severity_text": "",
-                    "body": "",
-                    "attributes": {},
-                    "resource": res_attrs,
-                    "scope_name": scope_name,
-                    "scope_version": scope_version,
-                    "trace_id": "",
-                    "span_id": "",
-                    "flags": 0,
-                    "dropped_attributes_count": 0,
-                }
-                attr_msgs: list[bytes] = []
-                for f, _, v in _fields(rec):
-                    if f == 1:
-                        r["ts"] = pd.Timestamp(v // 1000, unit="us")
-                    elif f == 11:
-                        r["observed_ts"] = pd.Timestamp(v // 1000, unit="us")
-                    elif f == 2:
-                        r["severity_number"] = v
-                    elif f == 3:
-                        r["severity_text"] = v.decode("utf-8")
-                    elif f == 5:
-                        r["body"] = _dec_anyvalue(v)
-                    elif f == 6:
-                        attr_msgs.append(v)
-                    elif f == 7:
-                        r["dropped_attributes_count"] = v
-                    elif f == 8:
-                        r["flags"] = v
-                    elif f == 9:
-                        r["trace_id"] = v.hex()
-                    elif f == 10:
-                        r["span_id"] = v.hex()
-                r["attributes"] = _dec_kvs(attr_msgs)
-                rows.append(r)
+                    items.append(v)
+            for it in items:
+                yield res_attrs, name, version, it
+
+
+def _metric_points(msg: bytes, arms: tuple[int, ...]):
+    """Every data point of the Metrics whose oneof is one of ``arms``
+    (gauge=5, sum=7, histogram=9, exponential_histogram=10, summary=11),
+    as ``(resource, scope name, metric, point bytes)``; ``metric`` holds
+    name, unit, arm, temporality and monotonic.  Each arm carries its
+    points as data_points=1; histogram, exponential histogram and sum
+    carry aggregation_temporality=2, sum also is_monotonic=3."""
+    for res_attrs, scope_name, _, m in _scoped(msg):
+        metric = {"name": "", "unit": "", "arm": None, "temporality": 0,
+                  "monotonic": False}
+        pts: list[bytes] = []
+        for f, _, v in _fields(m):
+            if f == 1:
+                metric["name"] = v.decode("utf-8")
+            elif f == 3:
+                metric["unit"] = v.decode("utf-8")
+            elif f in arms:
+                metric["arm"] = f
+                for fn, _, sv in _fields(v):
+                    if fn == 1:
+                        pts.append(sv)
+                    elif fn == 2:
+                        metric["temporality"] = sv
+                    elif fn == 3:
+                        metric["monotonic"] = bool(sv)
+        for p in pts:
+            yield res_attrs, scope_name, metric, p
+
+
+def decode_logs_data(msg: bytes) -> list[dict]:
+    """One LogsData message → flat record dicts (parse_otlp_logs shape)."""
+    rows: list[dict] = []
+    for res_attrs, scope_name, scope_version, rec in _scoped(msg):
+        r = dict(_LOGS_ZERO, resource=res_attrs, scope_name=scope_name,
+                 scope_version=scope_version)
+        attr_msgs: list[bytes] = []
+        for f, _, v in _fields(rec):
+            if f == 1:
+                r["ts"] = _ts(v)
+            elif f == 11:
+                r["observed_ts"] = _ts(v)
+            elif f == 2:
+                r["severity_number"] = v
+            elif f == 3:
+                r["severity_text"] = v.decode("utf-8")
+            elif f == 5:
+                r["body"] = _dec_anyvalue(v)
+            elif f == 6:
+                attr_msgs.append(v)
+            elif f == 7:
+                r["dropped_attributes_count"] = v
+            elif f == 8:
+                r["flags"] = v
+            elif f == 9:
+                r["trace_id"] = v.hex()
+            elif f == 10:
+                r["span_id"] = v.hex()
+        r["attributes"] = _dec_kvs(attr_msgs)
+        rows.append(r)
     return rows
 
 
-def _framed_decoder(frame_col: str, decode_fn, columns: list[str]):
-    """Shared mapInPandas generator behind all four framed-proto parsers:
+def _framed_decoder(frame_col: str, decode_fn, columns):
+    """Shared mapInPandas generator behind all six framed-proto parsers:
     unpack the 4-byte BE size prefix, enforce exact framing (the
     reference's unmarshal errors the batch, it does not skip), decode
-    each message with ``decode_fn``."""
+    each message with ``decode_fn``; ``columns`` is the signal's zero
+    row, whose keys are the frame's columns in DDL order."""
 
     def gen(batches):
         for pdf in batches:
@@ -417,7 +492,7 @@ def _framed_decoder(frame_col: str, decode_fn, columns: list[str]):
                 if n != len(b) - 4:
                     raise ValueError(f"framing: declared {n}, got {len(b) - 4}")
                 rows.extend(decode_fn(b[4:]))
-            yield pd.DataFrame(rows, columns=columns)
+            yield pd.DataFrame(rows, columns=list(columns))
 
     return gen
 
@@ -428,13 +503,7 @@ def parse_otlp_proto_logs(df: DataFrame, frame_col: str = "frame") -> DataFrame:
     size prefix + LogsData; a short/corrupt frame raises (the
     reference's unmarshal errors the batch, it does not skip)."""
     return df.mapInPandas(
-        _framed_decoder(frame_col, decode_logs_data, [
-                    "ts", "observed_ts", "severity_number", "severity_text",
-                    "body", "attributes", "resource", "scope_name",
-                    "scope_version", "trace_id", "span_id", "flags",
-                    "dropped_attributes_count",
-                ]),
-        _LOGS_FLAT_DDL,
+        _framed_decoder(frame_col, decode_logs_data, _LOGS_ZERO), _LOGS_FLAT_DDL
     )
 
 
@@ -449,6 +518,12 @@ _TRACES_FLAT_DDL = (
     "attributes map<string,string>, resource map<string,string>, "
     "scope_name string"
 )
+_TRACES_ZERO = {
+    "trace_id": "", "span_id": "", "parent_span_id": "", "name": "",
+    "kind": 0, "start_ts": None, "end_ts": None, "status_code": 0,
+    "status_message": "", "trace_state": "", "attributes": {},
+    "resource": {}, "scope_name": "",
+}
 
 
 def _encode_span(r) -> bytes:
@@ -482,23 +557,16 @@ def _encode_traces_records(recs: list[dict]) -> bytes:
     against cannot drift from the marshal.  Takes plain dicts (not a
     pandas frame) so a batch caller can pay pandas' sort/to_dict cost
     once per Arrow batch instead of once per trace."""
-    res = _encode_resource(recs[0]["_res"])
-    scope_spans = bytearray()
-    for name, g in itertools.groupby(recs, key=lambda r: r["scope_name"]):
-        body = bytearray(_f_msg(1, _f_str(1, name)))  # ScopeSpans.scope=1
-        for r in g:
-            body += _f_msg_elem(2, _encode_span(r))  # ScopeSpans.spans=2
-        scope_spans += _f_msg(2, bytes(body))  # ResourceSpans.scope_spans=2
-    rs = _f_msg(1, res) + bytes(scope_spans)  # ResourceSpans{resource=1,...}
-    return _f_msg(1, rs)  # TracesData.resource_spans=1
+    scopes = [
+        _scope(name, "", map(_encode_span, g))
+        for name, g in itertools.groupby(recs, key=lambda r: r["scope_name"])
+    ]
+    return _data(recs[0]["_res"], scopes)
 
 
 def _encode_traces_group(pdf: pd.DataFrame) -> bytes:
     """Frame-based wrapper over ``_encode_traces_records``: sorts the
-    group, then marshals.  (groupby(sort=True) on the old path and the
-    sort_values prefix here yield identical scope order — scope_name is
-    the leading sort key, and itertools.groupby over sorted records
-    visits scopes in that same ascending order.)"""
+    group, then marshals."""
     pdf = pdf.sort_values(["scope_name", "start_ts", "span_id"], kind="mergesort")
     return _encode_traces_records(pdf.to_dict("records"))
 
@@ -510,80 +578,42 @@ def to_otlp_traces_proto(df: DataFrame) -> DataFrame:
     by name, spans by (start_ts, span_id)); span events/links are not
     carried, exactly like the JSON arm (they live in the separate
     spanevent frame)."""
-    keyed = df.withColumns(
-        {
-            "_res": _entries("resource"),
-            "_attrs": _entries("attributes"),
-            "_rkey": F.to_json(_entries("resource")),
-            "scope_name": _nn("scope_name"),
-        }
-    )
-
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame({"msg": [_encode_traces_group(pdf)]})
-
-    return keyed.groupBy("_rkey").applyInPandas(encode, "msg binary")
+    return _by_resource(df, {"scope_name": ""}, _encode_traces_group)
 
 
 def decode_traces_data(msg: bytes) -> list[dict]:
     """One TracesData message → flat span dicts (parse_otlp_traces shape)."""
     rows: list[dict] = []
-    for f_rs, _, rs in _fields(msg):
-        if f_rs != 1:
-            continue
-        res_attrs: dict[str, str] = {}
-        scope_msgs: list[bytes] = []
-        for f, _, v in _fields(rs):
+    for res_attrs, scope_name, _, sp in _scoped(msg):
+        r = dict(_TRACES_ZERO, resource=res_attrs, scope_name=scope_name)
+        attr_msgs: list[bytes] = []
+        for f, _, v in _fields(sp):
             if f == 1:
-                res_attrs = _dec_kvs([kv for fn, _, kv in _fields(v) if fn == 1])
+                r["trace_id"] = v.hex()
             elif f == 2:
-                scope_msgs.append(v)
-        for ss in scope_msgs:
-            scope_name = ""
-            spans: list[bytes] = []
-            for f, _, v in _fields(ss):
-                if f == 1:
-                    for fn, _, sv in _fields(v):
-                        if fn == 1:
-                            scope_name = sv.decode("utf-8")
-                elif f == 2:
-                    spans.append(v)
-            for sp in spans:
-                r = {
-                    "trace_id": "", "span_id": "", "parent_span_id": "",
-                    "name": "", "kind": 0, "start_ts": None, "end_ts": None,
-                    "status_code": 0, "status_message": "", "trace_state": "",
-                    "attributes": {}, "resource": res_attrs,
-                    "scope_name": scope_name,
-                }
-                attr_msgs: list[bytes] = []
-                for f, _, v in _fields(sp):
-                    if f == 1:
-                        r["trace_id"] = v.hex()
-                    elif f == 2:
-                        r["span_id"] = v.hex()
-                    elif f == 3:
-                        r["trace_state"] = v.decode("utf-8")
-                    elif f == 4:
-                        r["parent_span_id"] = v.hex()
-                    elif f == 5:
-                        r["name"] = v.decode("utf-8")
-                    elif f == 6:
-                        r["kind"] = v
-                    elif f == 7:
-                        r["start_ts"] = pd.Timestamp(v // 1000, unit="us")
-                    elif f == 8:
-                        r["end_ts"] = pd.Timestamp(v // 1000, unit="us")
-                    elif f == 9:
-                        attr_msgs.append(v)
-                    elif f == 15:
-                        for fn, _, sv in _fields(v):
-                            if fn == 2:
-                                r["status_message"] = sv.decode("utf-8")
-                            elif fn == 3:
-                                r["status_code"] = sv
-                r["attributes"] = _dec_kvs(attr_msgs)
-                rows.append(r)
+                r["span_id"] = v.hex()
+            elif f == 3:
+                r["trace_state"] = v.decode("utf-8")
+            elif f == 4:
+                r["parent_span_id"] = v.hex()
+            elif f == 5:
+                r["name"] = v.decode("utf-8")
+            elif f == 6:
+                r["kind"] = v
+            elif f == 7:
+                r["start_ts"] = _ts(v)
+            elif f == 8:
+                r["end_ts"] = _ts(v)
+            elif f == 9:
+                attr_msgs.append(v)
+            elif f == 15:
+                for fn, _, sv in _fields(v):
+                    if fn == 2:
+                        r["status_message"] = sv.decode("utf-8")
+                    elif fn == 3:
+                        r["status_code"] = sv
+        r["attributes"] = _dec_kvs(attr_msgs)
+        rows.append(r)
     return rows
 
 
@@ -591,11 +621,7 @@ def parse_otlp_proto_traces(df: DataFrame, frame_col: str = "frame") -> DataFram
     """Framed TracesData messages → one row per span, the proto twin of
     ``parse_otlp_traces`` (identical output schema)."""
     return df.mapInPandas(
-        _framed_decoder(frame_col, decode_traces_data, [
-                    "trace_id", "span_id", "parent_span_id", "name", "kind",
-                    "start_ts", "end_ts", "status_code", "status_message",
-                    "trace_state", "attributes", "resource", "scope_name",
-                ]),
+        _framed_decoder(frame_col, decode_traces_data, _TRACES_ZERO),
         _TRACES_FLAT_DDL,
     )
 
@@ -612,6 +638,12 @@ _METRICS_FLAT_DDL = (
     "attributes map<string,string>, resource map<string,string>, "
     "scope_name string"
 )
+_METRICS_ZERO = {
+    "metric_name": "", "unit": "", "metric_type": "",
+    "aggregation_temporality": 0, "is_monotonic": False, "start_ts": None,
+    "ts": None, "value": 0.0, "attributes": {}, "resource": {},
+    "scope_name": "",
+}
 
 
 def _f_double_oneof(field: int, v: float) -> bytes:
@@ -638,129 +670,63 @@ def to_otlp_metrics_proto(df: DataFrame) -> DataFrame:
     message — the proto twin of ``to_otlp_metrics_json`` (same
     three-level fold resource → scope → metric → points, same
     asDouble value-form divergence for asInt inputs)."""
-    keyed = df.withColumns(
-        {
-            "_res": _entries("resource"),
-            "_attrs": _entries("attributes"),
-            "_akey": F.to_json(_entries("attributes")),
-            "_rkey": F.to_json(_entries("resource")),
-            "scope_name": _nn("scope_name"),
-            "metric_name": _nn("metric_name"),
-            "unit": _nn("unit"),
-            "metric_type": _nn("metric_type"),
-            # NULL temporality/monotonic group (and encode) as the proto3
-            # zero values, like every other absent scalar on the wire
-            "aggregation_temporality": F.coalesce(
-                F.col("aggregation_temporality"), F.lit(0)
-            ),
-            "is_monotonic": F.coalesce(F.col("is_monotonic"), F.lit(False)),
-        }
-    )
 
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
+    def encode(pdf: pd.DataFrame) -> bytes:
         pdf = pdf.sort_values(["ts", "_akey"], kind="mergesort")
-        res = _encode_resource(pdf.iloc[0]["_res"])
-        scope_metrics = bytearray()
+        scopes = []
         for sname, sg in pdf.groupby("scope_name", sort=True):
-            body = bytearray(_f_msg(1, _f_str(1, sname)))  # ScopeMetrics.scope=1
+            metrics = []
             for (mname, unit, mtype, at, mono), mg in sg.groupby(
                 ["metric_name", "unit", "metric_type",
                  "aggregation_temporality", "is_monotonic"],
                 sort=True,
             ):
-                m = bytearray(_f_str(1, mname) + _f_str(3, unit))
-                pts = bytearray()
-                for r in mg.to_dict("records"):
-                    pts += _f_msg_elem(1, _encode_number_point(r))  # data_points=1
+                pts = _points(mg, _encode_number_point)
                 if mtype == "gauge":
-                    m += _f_msg(5, bytes(pts))  # Metric.gauge=5
+                    arm = _f_msg(5, pts)  # Metric.gauge=5
                 else:
-                    s = bytes(pts) + _f_varint(2, int(at)) + (
-                        _f_varint(3, 1) if mono else b""
-                    )
-                    m += _f_msg(7, s)  # Metric.sum=7
-                body += _f_msg(2, bytes(m))  # ScopeMetrics.metrics=2
-            scope_metrics += _f_msg(2, bytes(body))  # ResourceMetrics.scope_metrics=2
-        rm = _f_msg(1, res) + bytes(scope_metrics)
-        return pd.DataFrame({"msg": [_f_msg(1, rm)]})  # MetricsData.resource_metrics=1
+                    s = pts + _f_varint(2, int(at)) + (_f_varint(3, 1) if mono else b"")
+                    arm = _f_msg(7, s)  # Metric.sum=7
+                metrics.append(_f_str(1, mname) + _f_str(3, unit) + arm)
+            scopes.append(_scope(sname, "", metrics))
+        return _data(pdf.iloc[0]["_res"], scopes)
 
-    return keyed.groupBy("_rkey").applyInPandas(encode, "msg binary")
+    return _by_resource(
+        df,
+        {"scope_name": "", "metric_name": "", "unit": "", "metric_type": "",
+         "aggregation_temporality": 0, "is_monotonic": False},
+        encode,
+    )
 
 
 def decode_metrics_data(msg: bytes) -> list[dict]:
     """One MetricsData message → flat number-point dicts
-    (parse_otlp_metrics shape); gauge/sum arms only — histogram /
-    exponential-histogram / summary arms are JSON-marshal-only, like
-    the encode side."""
+    (parse_otlp_metrics shape); gauge/sum arms only — the histogram,
+    exponential-histogram and summary arms decode through their own
+    ``decode_*_data``."""
     rows: list[dict] = []
-    for f_rm, _, rm in _fields(msg):
-        if f_rm != 1:
-            continue
-        res_attrs: dict[str, str] = {}
-        scope_msgs: list[bytes] = []
-        for f, _, v in _fields(rm):
-            if f == 1:
-                res_attrs = _dec_kvs([kv for fn, _, kv in _fields(v) if fn == 1])
-            elif f == 2:
-                scope_msgs.append(v)
-        for sm in scope_msgs:
-            scope_name = ""
-            metrics: list[bytes] = []
-            for f, _, v in _fields(sm):
-                if f == 1:
-                    for fn, _, sv in _fields(v):
-                        if fn == 1:
-                            scope_name = sv.decode("utf-8")
-                elif f == 2:
-                    metrics.append(v)
-            for m in metrics:
-                name = unit = ""
-                arm, at, mono = None, 0, False
-                pts: list[bytes] = []
-                for f, _, v in _fields(m):
-                    if f == 1:
-                        name = v.decode("utf-8")
-                    elif f == 3:
-                        unit = v.decode("utf-8")
-                    elif f == 5:  # Gauge
-                        arm = "gauge"
-                        pts = [p for fn, _, p in _fields(v) if fn == 1]
-                    elif f == 7:  # Sum
-                        arm = "sum"
-                        for fn, _, sv in _fields(v):
-                            if fn == 1:
-                                pts.append(sv)
-                            elif fn == 2:
-                                at = sv
-                            elif fn == 3:
-                                mono = bool(sv)
-                if arm is None:
-                    continue
-                for p in pts:
-                    r = {
-                        "metric_name": name, "unit": unit, "metric_type": arm,
-                        "aggregation_temporality": at if arm == "sum" else 0,
-                        "is_monotonic": mono if arm == "sum" else False,
-                        "start_ts": None, "ts": None, "value": 0.0,
-                        "attributes": {}, "resource": res_attrs,
-                        "scope_name": scope_name,
-                    }
-                    attr_msgs: list[bytes] = []
-                    for f, w, v in _fields(p):
-                        if f == 2:
-                            r["start_ts"] = pd.Timestamp(v // 1000, unit="us")
-                        elif f == 3:
-                            r["ts"] = pd.Timestamp(v // 1000, unit="us")
-                        elif f == 4:
-                            r["value"] = struct.unpack("<d", struct.pack("<Q", v))[0]
-                        elif f == 6:
-                            r["value"] = float(
-                                struct.unpack("<q", struct.pack("<Q", v))[0]
-                            )
-                        elif f == 7:
-                            attr_msgs.append(v)
-                    r["attributes"] = _dec_kvs(attr_msgs)
-                    rows.append(r)
+    for res_attrs, scope_name, m, p in _metric_points(msg, (5, 7)):
+        r = dict(
+            _METRICS_ZERO, metric_name=m["name"], unit=m["unit"],
+            metric_type="gauge" if m["arm"] == 5 else "sum",
+            aggregation_temporality=m["temporality"],
+            is_monotonic=m["monotonic"], resource=res_attrs,
+            scope_name=scope_name,
+        )
+        attr_msgs: list[bytes] = []
+        for f, _, v in _fields(p):
+            if f == 2:
+                r["start_ts"] = _ts(v)
+            elif f == 3:
+                r["ts"] = _ts(v)
+            elif f == 4:
+                r["value"] = _dbl(v)
+            elif f == 6:
+                r["value"] = float(struct.unpack("<q", struct.pack("<Q", v))[0])
+            elif f == 7:
+                attr_msgs.append(v)
+        r["attributes"] = _dec_kvs(attr_msgs)
+        rows.append(r)
     return rows
 
 
@@ -768,11 +734,7 @@ def parse_otlp_proto_metrics(df: DataFrame, frame_col: str = "frame") -> DataFra
     """Framed MetricsData messages → one row per number point, the
     proto twin of ``parse_otlp_metrics`` (identical output schema)."""
     return df.mapInPandas(
-        _framed_decoder(frame_col, decode_metrics_data, [
-                    "metric_name", "unit", "metric_type",
-                    "aggregation_temporality", "is_monotonic", "start_ts",
-                    "ts", "value", "attributes", "resource", "scope_name",
-                ]),
+        _framed_decoder(frame_col, decode_metrics_data, _METRICS_ZERO),
         _METRICS_FLAT_DDL,
     )
 
@@ -790,6 +752,14 @@ _EXP_FLAT_DDL = (
     "negative_bucket_counts array<long>, attributes map<string,string>, "
     "resource map<string,string>"
 )
+_EXP_ZERO = {
+    "metric_name": "", "aggregation_temporality": 0, "start_ts": None,
+    "ts": None, "count": 0, "sum": None, "min": None, "max": None,
+    "scale": 0, "zero_count": 0, "zero_threshold": 0.0,
+    "positive_offset": 0, "positive_bucket_counts": [],
+    "negative_offset": 0, "negative_bucket_counts": [], "attributes": {},
+    "resource": {},
+}
 
 
 def _zigzag(n: int) -> int:
@@ -856,36 +826,29 @@ def to_otlp_exp_histograms_proto(df: DataFrame) -> DataFrame:
     resource identity — the proto twin of
     ``to_otlp_exp_histograms_json`` (same grouping: one unnamed scope,
     metrics per (name, temporality), points by (ts, attrs))."""
-    keyed = df.withColumns(
-        {
-            "_res": _entries("resource"),
-            "_attrs": _entries("attributes"),
-            "_akey": F.to_json(_entries("attributes")),
-            "_rkey": F.to_json(_entries("resource")),
-            "metric_name": _nn("metric_name"),
-            "aggregation_temporality": F.coalesce(
-                F.col("aggregation_temporality"), F.lit(0)
-            ),
-        }
-    )
+    return _histograms_proto(df, 10, _encode_exp_point)  # exponential_histogram=10
 
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
+
+def _histograms_proto(df: DataFrame, arm: int, encode_point) -> DataFrame:
+    """The explicit (Metric.histogram=9) and exponential
+    (Metric.exponential_histogram=10) marshal: one unnamed scope, like
+    the JSON arms, one Metric per (name, temporality), points by
+    (ts, attrs)."""
+
+    def encode(pdf: pd.DataFrame) -> bytes:
         pdf = pdf.sort_values(["ts", "_akey"], kind="mergesort")
-        res = _encode_resource(pdf.iloc[0]["_res"])
-        body = bytearray()  # one unnamed scope, like the JSON arm
-        for (mname, at), mg in pdf.groupby(
-            ["metric_name", "aggregation_temporality"], sort=True
-        ):
-            pts = bytearray()
-            for r in mg.to_dict("records"):
-                pts += _f_msg_elem(1, _encode_exp_point(r))  # data_points=1
-            eh = bytes(pts) + _f_varint(2, int(at))
-            m = _f_str(1, mname) + _f_msg(10, eh)  # Metric.exponential_histogram=10
-            body += _f_msg(2, m)  # ScopeMetrics.metrics=2
-        rm = _f_msg(1, res) + _f_msg(2, bytes(body))  # scope_metrics=2
-        return pd.DataFrame({"msg": [_f_msg(1, rm)]})
+        metrics = [
+            _f_str(1, mname)
+            + _f_msg(arm, _points(mg, encode_point) + _f_varint(2, int(at)))
+            for (mname, at), mg in pdf.groupby(
+                ["metric_name", "aggregation_temporality"], sort=True
+            )
+        ]
+        return _data(pdf.iloc[0]["_res"], [_scope("", "", metrics)])
 
-    return keyed.groupBy("_rkey").applyInPandas(encode, "msg binary")
+    return _by_resource(
+        df, {"metric_name": "", "aggregation_temporality": 0}, encode
+    )
 
 
 def _dec_packed_varints(b: bytes) -> list[int]:
@@ -910,71 +873,37 @@ def decode_exp_histograms_data(msg: bytes) -> list[dict]:
     """One MetricsData message → flat exponential-histogram point dicts
     (parse_otlp_exp_histograms shape)."""
     rows: list[dict] = []
-    for f_rm, _, rm in _fields(msg):
-        if f_rm != 1:
-            continue
-        res_attrs: dict[str, str] = {}
-        scope_msgs: list[bytes] = []
-        for f, _, v in _fields(rm):
+    for res_attrs, _, m, p in _metric_points(msg, (10,)):
+        r = dict(_EXP_ZERO, metric_name=m["name"],
+                 aggregation_temporality=m["temporality"], resource=res_attrs)
+        attr_msgs: list[bytes] = []
+        for f, _, v in _fields(p):
             if f == 1:
-                res_attrs = _dec_kvs([kv for fn, _, kv in _fields(v) if fn == 1])
+                attr_msgs.append(v)
             elif f == 2:
-                scope_msgs.append(v)
-        for sm in scope_msgs:
-            for f_m, _, m in _fields(sm):
-                if f_m != 2:
-                    continue
-                name, at = "", 0
-                pts: list[bytes] = []
-                for f, _, v in _fields(m):
-                    if f == 1:
-                        name = v.decode("utf-8")
-                    elif f == 10:  # ExponentialHistogram
-                        for fn, _, sv in _fields(v):
-                            if fn == 1:
-                                pts.append(sv)
-                            elif fn == 2:
-                                at = sv
-                for p in pts:
-                    r = {
-                        "metric_name": name, "aggregation_temporality": at,
-                        "start_ts": None, "ts": None, "count": 0,
-                        "sum": None, "min": None, "max": None, "scale": 0,
-                        "zero_count": 0, "zero_threshold": 0.0,
-                        "positive_offset": 0, "positive_bucket_counts": [],
-                        "negative_offset": 0, "negative_bucket_counts": [],
-                        "attributes": {}, "resource": res_attrs,
-                    }
-                    attr_msgs: list[bytes] = []
-                    for f, _, v in _fields(p):
-                        if f == 1:
-                            attr_msgs.append(v)
-                        elif f == 2:
-                            r["start_ts"] = pd.Timestamp(v // 1000, unit="us")
-                        elif f == 3:
-                            r["ts"] = pd.Timestamp(v // 1000, unit="us")
-                        elif f == 4:
-                            r["count"] = v
-                        elif f == 5:
-                            r["sum"] = struct.unpack("<d", struct.pack("<Q", v))[0]
-                        elif f == 6:
-                            r["scale"] = _unzigzag(v)
-                        elif f == 7:
-                            r["zero_count"] = v
-                        elif f == 8:
-                            r["positive_offset"], r["positive_bucket_counts"] = _dec_buckets(v)
-                        elif f == 9:
-                            r["negative_offset"], r["negative_bucket_counts"] = _dec_buckets(v)
-                        elif f == 12:
-                            r["min"] = struct.unpack("<d", struct.pack("<Q", v))[0]
-                        elif f == 13:
-                            r["max"] = struct.unpack("<d", struct.pack("<Q", v))[0]
-                        elif f == 14:
-                            r["zero_threshold"] = struct.unpack(
-                                "<d", struct.pack("<Q", v)
-                            )[0]
-                    r["attributes"] = _dec_kvs(attr_msgs)
-                    rows.append(r)
+                r["start_ts"] = _ts(v)
+            elif f == 3:
+                r["ts"] = _ts(v)
+            elif f == 4:
+                r["count"] = v
+            elif f == 5:
+                r["sum"] = _dbl(v)
+            elif f == 6:
+                r["scale"] = _unzigzag(v)
+            elif f == 7:
+                r["zero_count"] = v
+            elif f == 8:
+                r["positive_offset"], r["positive_bucket_counts"] = _dec_buckets(v)
+            elif f == 9:
+                r["negative_offset"], r["negative_bucket_counts"] = _dec_buckets(v)
+            elif f == 12:
+                r["min"] = _dbl(v)
+            elif f == 13:
+                r["max"] = _dbl(v)
+            elif f == 14:
+                r["zero_threshold"] = _dbl(v)
+        r["attributes"] = _dec_kvs(attr_msgs)
+        rows.append(r)
     return rows
 
 
@@ -984,13 +913,7 @@ def parse_otlp_proto_exp_histograms(
     """Framed MetricsData messages → one row per exponential-histogram
     point, the proto twin of ``parse_otlp_exp_histograms``."""
     return df.mapInPandas(
-        _framed_decoder(frame_col, decode_exp_histograms_data, [
-                    "metric_name", "aggregation_temporality", "start_ts",
-                    "ts", "count", "sum", "min", "max", "scale",
-                    "zero_count", "zero_threshold", "positive_offset",
-                    "positive_bucket_counts", "negative_offset",
-                    "negative_bucket_counts", "attributes", "resource",
-                ]),
+        _framed_decoder(frame_col, decode_exp_histograms_data, _EXP_ZERO),
         _EXP_FLAT_DDL,
     )
 
@@ -1006,6 +929,12 @@ _HIST_FLAT_DDL = (
     "explicit_bounds array<double>, attributes map<string,string>, "
     "resource map<string,string>"
 )
+_HIST_ZERO = {
+    "metric_name": "", "aggregation_temporality": 0, "start_ts": None,
+    "ts": None, "count": 0, "sum": None, "min": None, "max": None,
+    "bucket_counts": [], "explicit_bounds": [], "attributes": {},
+    "resource": {},
+}
 
 
 def _f_packed_fixed64(field: int, vals) -> bytes:
@@ -1065,106 +994,45 @@ def to_otlp_histograms_proto(df: DataFrame) -> DataFrame:
     shape) → one ``msg`` binary per resource identity — the proto twin
     of ``to_otlp_histograms_json`` (same grouping: one unnamed scope,
     metrics per (name, temporality), points by (ts, attrs))."""
-    keyed = df.withColumns(
-        {
-            "_res": _entries("resource"),
-            "_attrs": _entries("attributes"),
-            "_akey": F.to_json(_entries("attributes")),
-            "_rkey": F.to_json(_entries("resource")),
-            "metric_name": _nn("metric_name"),
-            "aggregation_temporality": F.coalesce(
-                F.col("aggregation_temporality"), F.lit(0)
-            ),
-        }
-    )
-
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "_akey"], kind="mergesort")
-        res = _encode_resource(pdf.iloc[0]["_res"])
-        body = bytearray()  # one unnamed scope, like the JSON arm
-        for (mname, at), mg in pdf.groupby(
-            ["metric_name", "aggregation_temporality"], sort=True
-        ):
-            pts = bytearray()
-            for r in mg.to_dict("records"):
-                pts += _f_msg_elem(1, _encode_hist_point(r))  # data_points=1
-            h = bytes(pts) + _f_varint(2, int(at))
-            m = _f_str(1, mname) + _f_msg(9, h)  # Metric.histogram=9
-            body += _f_msg(2, m)  # ScopeMetrics.metrics=2
-        rm = _f_msg(1, res) + _f_msg(2, bytes(body))  # scope_metrics=2
-        return pd.DataFrame({"msg": [_f_msg(1, rm)]})
-
-    return keyed.groupBy("_rkey").applyInPandas(encode, "msg binary")
+    return _histograms_proto(df, 9, _encode_hist_point)  # Metric.histogram=9
 
 
 def decode_histograms_data(msg: bytes) -> list[dict]:
     """One MetricsData message → flat explicit-histogram point dicts
     (parse_otlp_histograms shape)."""
     rows: list[dict] = []
-    for f_rm, _, rm in _fields(msg):
-        if f_rm != 1:
-            continue
-        res_attrs: dict[str, str] = {}
-        scope_msgs: list[bytes] = []
-        for f, _, v in _fields(rm):
-            if f == 1:
-                res_attrs = _dec_kvs([kv for fn, _, kv in _fields(v) if fn == 1])
-            elif f == 2:
-                scope_msgs.append(v)
-        for sm in scope_msgs:
-            for f_m, _, m in _fields(sm):
-                if f_m != 2:
-                    continue
-                name, at = "", 0
-                pts: list[bytes] = []
-                for f, _, v in _fields(m):
-                    if f == 1:
-                        name = v.decode("utf-8")
-                    elif f == 9:  # Histogram
-                        for fn, _, sv in _fields(v):
-                            if fn == 1:
-                                pts.append(sv)
-                            elif fn == 2:
-                                at = sv
-                for p in pts:
-                    r = {
-                        "metric_name": name, "aggregation_temporality": at,
-                        "start_ts": None, "ts": None, "count": 0,
-                        "sum": None, "min": None, "max": None,
-                        "bucket_counts": [], "explicit_bounds": [],
-                        "attributes": {}, "resource": res_attrs,
-                    }
-                    attr_msgs: list[bytes] = []
-                    for f, w, v in _fields(p):
-                        if f == 2:
-                            r["start_ts"] = pd.Timestamp(v // 1000, unit="us")
-                        elif f == 3:
-                            r["ts"] = pd.Timestamp(v // 1000, unit="us")
-                        elif f == 4:
-                            r["count"] = v
-                        elif f == 5:
-                            r["sum"] = struct.unpack("<d", struct.pack("<Q", v))[0]
-                        elif f == 6:
-                            # parsers MUST accept packed AND unpacked
-                            # repeated encodings (the exp-histogram
-                            # _dec_buckets carries the same guard)
-                            r["bucket_counts"] = r["bucket_counts"] + (
-                                _dec_packed_fixed64(v) if w == 2 else [v]
-                            )
-                        elif f == 7:
-                            r["explicit_bounds"] = r["explicit_bounds"] + (
-                                _dec_packed_doubles(v)
-                                if w == 2
-                                else [struct.unpack("<d", struct.pack("<Q", v))[0]]
-                            )
-                        elif f == 9:
-                            attr_msgs.append(v)
-                        elif f == 11:
-                            r["min"] = struct.unpack("<d", struct.pack("<Q", v))[0]
-                        elif f == 12:
-                            r["max"] = struct.unpack("<d", struct.pack("<Q", v))[0]
-                    r["attributes"] = _dec_kvs(attr_msgs)
-                    rows.append(r)
+    for res_attrs, _, m, p in _metric_points(msg, (9,)):
+        r = dict(_HIST_ZERO, metric_name=m["name"],
+                 aggregation_temporality=m["temporality"], resource=res_attrs)
+        attr_msgs: list[bytes] = []
+        for f, w, v in _fields(p):
+            if f == 2:
+                r["start_ts"] = _ts(v)
+            elif f == 3:
+                r["ts"] = _ts(v)
+            elif f == 4:
+                r["count"] = v
+            elif f == 5:
+                r["sum"] = _dbl(v)
+            elif f == 6:
+                # parsers MUST accept packed AND unpacked repeated
+                # encodings (the exp-histogram _dec_buckets carries the
+                # same guard)
+                r["bucket_counts"] = r["bucket_counts"] + (
+                    _dec_packed_fixed64(v) if w == 2 else [v]
+                )
+            elif f == 7:
+                r["explicit_bounds"] = r["explicit_bounds"] + (
+                    _dec_packed_doubles(v) if w == 2 else [_dbl(v)]
+                )
+            elif f == 9:
+                attr_msgs.append(v)
+            elif f == 11:
+                r["min"] = _dbl(v)
+            elif f == 12:
+                r["max"] = _dbl(v)
+        r["attributes"] = _dec_kvs(attr_msgs)
+        rows.append(r)
     return rows
 
 
@@ -1172,11 +1040,7 @@ def parse_otlp_proto_histograms(df: DataFrame, frame_col: str = "frame") -> Data
     """Framed MetricsData messages → one row per explicit-histogram
     point, the proto twin of ``parse_otlp_histograms``."""
     return df.mapInPandas(
-        _framed_decoder(frame_col, decode_histograms_data, [
-                    "metric_name", "aggregation_temporality", "start_ts",
-                    "ts", "count", "sum", "min", "max", "bucket_counts",
-                    "explicit_bounds", "attributes", "resource",
-                ]),
+        _framed_decoder(frame_col, decode_histograms_data, _HIST_ZERO),
         _HIST_FLAT_DDL,
     )
 
@@ -1192,6 +1056,12 @@ _SUMMARY_FLAT_DDL = (
     "attributes map<string,string>, resource map<string,string>, "
     "scope_name string"
 )
+# absent sum decodes to 0.0 — proto3 Summary sum has no presence
+_SUMMARY_ZERO = {
+    "metric_name": "", "unit": "", "start_ts": None, "ts": None,
+    "count": 0, "sum": 0.0, "quantiles": [], "attributes": {},
+    "resource": {}, "scope_name": "",
+}
 
 
 def _q_pair(q) -> tuple[float, float]:
@@ -1234,110 +1104,56 @@ def to_otlp_summaries_proto(df: DataFrame) -> DataFrame:
     ``msg`` binary per resource identity — the proto twin of
     ``to_otlp_summaries_json`` (scopes by name, metrics per (name,
     unit), points by (ts, attrs))."""
-    keyed = df.withColumns(
-        {
-            "_res": _entries("resource"),
-            "_attrs": _entries("attributes"),
-            "_akey": F.to_json(_entries("attributes")),
-            "_rkey": F.to_json(_entries("resource")),
-            "scope_name": _nn("scope_name"),
-            "metric_name": _nn("metric_name"),
-            "unit": _nn("unit"),
-        }
-    )
 
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
+    def encode(pdf: pd.DataFrame) -> bytes:
         pdf = pdf.sort_values(["ts", "_akey"], kind="mergesort")
-        res = _encode_resource(pdf.iloc[0]["_res"])
-        scope_metrics = bytearray()
-        for sname, sg in pdf.groupby("scope_name", sort=True):
-            body = bytearray(_f_msg(1, _f_str(1, sname)))  # ScopeMetrics.scope=1
-            for (mname, unit), mg in sg.groupby(["metric_name", "unit"], sort=True):
-                pts = bytearray()
-                for r in mg.to_dict("records"):
-                    pts += _f_msg_elem(1, _encode_summary_point(r))  # data_points=1
-                m = _f_str(1, mname) + _f_str(3, unit) + _f_msg(11, bytes(pts))
-                body += _f_msg(2, bytes(m))  # Metric.summary=11
-            scope_metrics += _f_msg(2, bytes(body))
-        rm = _f_msg(1, res) + bytes(scope_metrics)
-        return pd.DataFrame({"msg": [_f_msg(1, rm)]})
+        scopes = [
+            _scope(sname, "", [
+                # Metric{name=1, unit=3, summary=11}
+                _f_str(1, mname) + _f_str(3, unit)
+                + _f_msg(11, _points(mg, _encode_summary_point))
+                for (mname, unit), mg in sg.groupby(["metric_name", "unit"], sort=True)
+            ])
+            for sname, sg in pdf.groupby("scope_name", sort=True)
+        ]
+        return _data(pdf.iloc[0]["_res"], scopes)
 
-    return keyed.groupBy("_rkey").applyInPandas(encode, "msg binary")
+    return _by_resource(
+        df, {"scope_name": "", "metric_name": "", "unit": ""}, encode
+    )
 
 
 def decode_summaries_data(msg: bytes) -> list[dict]:
     """One MetricsData message → flat summary point dicts
-    (parse_otlp_summaries shape; absent sum decodes to 0.0 — proto3
-    Summary sum has no presence)."""
+    (parse_otlp_summaries shape)."""
     rows: list[dict] = []
-    for f_rm, _, rm in _fields(msg):
-        if f_rm != 1:
-            continue
-        res_attrs: dict[str, str] = {}
-        scope_msgs: list[bytes] = []
-        for f, _, v in _fields(rm):
-            if f == 1:
-                res_attrs = _dec_kvs([kv for fn, _, kv in _fields(v) if fn == 1])
-            elif f == 2:
-                scope_msgs.append(v)
-        for sm in scope_msgs:
-            scope_name = ""
-            metrics: list[bytes] = []
-            for f, _, v in _fields(sm):
-                if f == 1:
-                    for fn, _, sv in _fields(v):
-                        if fn == 1:
-                            scope_name = sv.decode("utf-8")
-                elif f == 2:
-                    metrics.append(v)
-            for m in metrics:
-                name, unit = "", ""
-                pts: list[bytes] = []
-                for f, _, v in _fields(m):
-                    if f == 1:
-                        name = v.decode("utf-8")
-                    elif f == 3:
-                        unit = v.decode("utf-8")
-                    elif f == 11:  # Summary
-                        for fn, _, sv in _fields(v):
-                            if fn == 1:
-                                pts.append(sv)
-                for p in pts:
-                    r = {
-                        "metric_name": name, "unit": unit,
-                        "start_ts": None, "ts": None, "count": 0,
-                        "sum": 0.0, "quantiles": [],
-                        "attributes": {}, "resource": res_attrs,
-                        "scope_name": scope_name,
-                    }
-                    attr_msgs: list[bytes] = []
-                    qs: list[dict] = []
-                    for f, _, v in _fields(p):
-                        if f == 2:
-                            r["start_ts"] = pd.Timestamp(v // 1000, unit="us")
-                        elif f == 3:
-                            r["ts"] = pd.Timestamp(v // 1000, unit="us")
-                        elif f == 4:
-                            r["count"] = v
-                        elif f == 5:
-                            r["sum"] = struct.unpack("<d", struct.pack("<Q", v))[0]
-                        elif f == 6:
-                            q = {"quantile": 0.0, "value": 0.0}
-                            for fn, _, sv in _fields(v):
-                                if fn == 1:
-                                    q["quantile"] = struct.unpack(
-                                        "<d", struct.pack("<Q", sv)
-                                    )[0]
-                                elif fn == 2:
-                                    q["value"] = struct.unpack(
-                                        "<d", struct.pack("<Q", sv)
-                                    )[0]
-                            qs.append(q)
-                        elif f == 7:
-                            attr_msgs.append(v)
-                    r["quantiles"] = qs
-                    r["attributes"] = _dec_kvs(attr_msgs)
-                    rows.append(r)
+    for res_attrs, scope_name, m, p in _metric_points(msg, (11,)):
+        r = dict(_SUMMARY_ZERO, metric_name=m["name"], unit=m["unit"],
+                 resource=res_attrs, scope_name=scope_name)
+        attr_msgs: list[bytes] = []
+        qs: list[dict] = []
+        for f, _, v in _fields(p):
+            if f == 2:
+                r["start_ts"] = _ts(v)
+            elif f == 3:
+                r["ts"] = _ts(v)
+            elif f == 4:
+                r["count"] = v
+            elif f == 5:
+                r["sum"] = _dbl(v)
+            elif f == 6:
+                q = {"quantile": 0.0, "value": 0.0}
+                for fn, _, sv in _fields(v):
+                    if fn == 1:
+                        q["quantile"] = _dbl(sv)
+                    elif fn == 2:
+                        q["value"] = _dbl(sv)
+                qs.append(q)
+            elif f == 7:
+                attr_msgs.append(v)
+        r["quantiles"] = qs
+        r["attributes"] = _dec_kvs(attr_msgs)
+        rows.append(r)
     return rows
 
 
@@ -1345,11 +1161,7 @@ def parse_otlp_proto_summaries(df: DataFrame, frame_col: str = "frame") -> DataF
     """Framed MetricsData messages → one row per summary point, the
     proto twin of ``parse_otlp_summaries``."""
     return df.mapInPandas(
-        _framed_decoder(frame_col, decode_summaries_data, [
-                    "metric_name", "unit", "start_ts", "ts", "count",
-                    "sum", "quantiles", "attributes", "resource",
-                    "scope_name",
-                ]),
+        _framed_decoder(frame_col, decode_summaries_data, _SUMMARY_ZERO),
         _SUMMARY_FLAT_DDL,
     )
 

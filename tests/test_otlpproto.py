@@ -507,41 +507,18 @@ def test_histogram_summary_cross_marshal_equivalence(spark):
         to_otlp_summaries_proto,
     )
 
-    h = _hist_flat(spark)
-    via_json = parse_otlp_histograms(to_otlp_histograms_json(h))
-    via_proto = parse_otlp_proto_histograms(
-        frame_messages(to_otlp_histograms_proto(h))
-    )
-    # normalize the one flat-model artifact: JSON omission of an empty
-    # bounds list parses to NULL, proto decode normalizes to [] — both
-    # mean "no bounds" (proto3 zero value)
-    def norm(df):
-        return sorted(
-            (
-                str(r["ts"]), r["count"], r["sum"], r["min"], r["max"],
-                list(r["bucket_counts"] or []), list(r["explicit_bounds"] or []),
-                dict(r["attributes"] or {}),
-            )
-            for r in df.collect()
+    for df, parse_json, to_json, parse_proto, to_proto in (
+        (_hist_flat(spark), parse_otlp_histograms, to_otlp_histograms_json,
+         parse_otlp_proto_histograms, to_otlp_histograms_proto),
+        (_summ_flat(spark), parse_otlp_summaries, to_otlp_summaries_json,
+         parse_otlp_proto_summaries, to_otlp_summaries_proto),
+    ):
+        via_json = parse_json(to_json(df))
+        via_proto = parse_proto(frame_messages(to_proto(df)))
+        cols = df.columns
+        assert sorted(map(repr, via_proto.select(cols).collect())) == sorted(
+            map(repr, via_json.select(cols).collect())
         )
-
-    assert norm(via_json) == norm(via_proto)
-
-    s = _summ_flat(spark)
-    sj = parse_otlp_summaries(to_otlp_summaries_json(s))
-    sp = parse_otlp_proto_summaries(frame_messages(to_otlp_summaries_proto(s)))
-
-    def snorm(df):
-        return sorted(
-            (
-                str(r["ts"]), r["count"], r["sum"],
-                [(q["quantile"], q["value"]) for q in (r["quantiles"] or [])],
-                r["scope_name"],
-            )
-            for r in df.collect()
-        )
-
-    assert snorm(sj) == snorm(sp)
 
 
 def test_null_count_encodes_as_zero_not_crash(spark):
