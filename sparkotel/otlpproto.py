@@ -26,10 +26,10 @@ encoder, including pdata's.
 
 Spark-first shape: one ``{Logs,Traces,Metrics}Data`` message per
 RESOURCE IDENTITY — the same batchperresourceattr grouping contract as
-the JSON marshals (``to_otlp_*_json``) — so the only shuffle is the hash exchange on
-the resource key that the JSON path already pays.  Byte assembly is
-not SQL-expressible, so groups encode inside an Arrow-batched
-``applyInPandas``; the LENGTH FRAMING, however, is a pure column
+the JSON marshals (``to_otlp_*_json``) — so the only shuffle is the
+hash exchange on the resource key that the JSON path already pays.
+Byte assembly is not SQL-expressible, so groups encode inside an
+Arrow-batched ``applyInPandas``; the LENGTH FRAMING, however, is a pure column
 expression (``unhex(lpad(hex(octet_length(msg)), 8, '0'))`` is the
 4-byte big-endian prefix), so framed output stays a projection.
 """
@@ -193,11 +193,6 @@ def _encode_log_record(r) -> bytes:
     return bytes(out)
 
 
-def _encode_scope(name: str, version: str) -> bytes:
-    # InstrumentationScope{name=1, version=2}
-    return _f_str(1, name) + _f_str(2, version)
-
-
 def _encode_resource(entries) -> bytes:
     # Resource{attributes=1 repeated KeyValue}
     out = bytearray()
@@ -210,7 +205,7 @@ def _scope(name: str, version: str, items) -> bytes:
     """One Scope{Logs,Spans,Metrics} entry: scope=1, then each encoded
     item as a list element of field 2 (log_records / spans / metrics).
     Tagged as ``Resource*.scope_*=2``; an unnamed scope omits field 1."""
-    body = _f_msg(1, _encode_scope(name, version))
+    body = _f_msg(1, _f_str(1, name) + _f_str(2, version))  # InstrumentationScope
     return _f_msg(2, body + b"".join(_f_msg_elem(2, it) for it in items))
 
 
