@@ -12,6 +12,9 @@ break on candidate id.
 
 from __future__ import annotations
 
+import functools
+import math
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -475,15 +478,21 @@ def ivf_kmeans_centroids(
     return cents
 
 
-def _cent_struct(vec: Column, cid: int, cvec: list[float]) -> Column:
-    # HOF cosine stays here: greatest() over K centroid structs each
-    # carrying a 3×dim unrolled chain explodes the generated code past
-    # the JIT limits — measured 11 s → 35 s on the semdedup bench when
-    # this site used the unrolled chain; the HOF form keeps the expression
+def _cent_struct(vec: Column, nv: Column, cid: int, cvec: list[float]) -> Column:
+    """(rounded cosine to the centroid, its id), given the vector's
+    ``_norm`` ``nv``.  The centroid's norm is a literal, folded on the
+    driver left to right from 0.0 as ``_norm`` folds, so the same IEEE
+    operations give the same bits."""
+    # HOF dot stays here: greatest() over K centroid structs each
+    # carrying an unrolled chain explodes the generated code past the
+    # JIT limits — measured 11 s → 35 s on the semdedup bench when this
+    # site used the unrolled chain; the HOF form keeps the expression
     # tree small and the assignment cost is K per row, not pair-count
     lit_vec = F.array(*[F.lit(x) for x in cvec])
+    cnorm = math.sqrt(functools.reduce(lambda acc, x: acc + x * x, cvec, 0.0))
     return F.struct(
-        F.round(cosine(vec, lit_vec), 6).alias("s"), F.lit(cid).alias("c")
+        F.round(F.try_divide(_dot(vec, lit_vec), nv * F.lit(cnorm)), 6).alias("s"),
+        F.lit(cid).alias("c"),
     )
 
 
@@ -497,10 +506,11 @@ def ivf_assign(
     """Nearest-centroid cell per vector — ``greatest`` over literal
     centroid structs (lexicographic: score, then centroid id), zero
     joins and zero shuffles; the centroid list rides into the task
-    closure like a broadcast."""
+    closure like a broadcast.  Adds ``out`` and the vector's norm
+    ``_nv``, computed once per row."""
     vec = F.col(vec_col)
-    best = F.greatest(*[_cent_struct(vec, cid, cvec) for cid, cvec in cents])
-    return df.withColumn(out, best.getField("c"))
+    best = F.greatest(*[_cent_struct(vec, F.col("_nv"), cid, cvec) for cid, cvec in cents])
+    return df.withColumn("_nv", _norm(vec)).withColumn(out, best.getField("c"))
 
 
 def ivf_cell_counts(
@@ -540,11 +550,14 @@ def ivf_topk(
     assigned = ivf_assign(df, cents, id_col, vec_col)
     vec = F.col(vec_col)
     ranked_cells = F.reverse(
-        F.array_sort(F.array(*[_cent_struct(vec, cid, cvec) for cid, cvec in cents]))
+        F.array_sort(
+            F.array(*[_cent_struct(vec, F.col("_nv"), cid, cvec) for cid, cvec in cents])
+        )
     )
     probed = F.transform(F.slice(ranked_cells, 1, n_probe), lambda s: s.getField("c"))
     q = (
         df.filter(F.col(id_col).isin(query_ids))
+        .withColumn("_nv", _norm(vec))
         .select(
             F.col(id_col).alias("qid"),
             F.col(vec_col).alias("qvec"),
@@ -733,29 +746,30 @@ def semdedup(
       constant-sized and the within-cell O(m²) is bounded;
     - the only shuffles are the cell-keyed window rank and the
       cell-equi-join — both key on ``cell``, so the window's exchange
-      is reusable for the join;
+      is reusable for the join, and the final ``groupBy(id, cell)``
+      is clustered by whichever key the probe side carries;
     - the candidate side is RANK-TRUNCATED at ``cap`` members per cell
       (the simhash/minhash degenerate-bucket discipline): a pathological
       pile-up cell costs at most m·cap comparisons, never m², and the
       truncation only loses dup edges INSIDE the overflow tail;
-    - only surviving pairs (score ≥ tau) reach the aggregate; the
-      join-back of per-doc verdicts is an id-equi-join, unhinted (the
-      decontaminate lesson: dup counts can be corpus-sized).
+    - every vector LEFT JOINs its earlier cell members and one
+      ``groupBy(id, cell)`` keeps the pairs with score ≥ tau, so each
+      vector keeps its row with no join back to a second assignment.
 
     Output: one row per input vector —
     (vec_id, cell, dup_of, max_sim, is_dup).
     """
     cents = ivf_centroid_rows(df, n_centroids, id_col, vec_col, dim)
     vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    # each vector's norm once, here, not once per scored pair
-    assigned = ivf_assign(vecs.withColumn("nv", _norm(F.col("vec"))), cents, "id", "vec")
+    # ivf_assign's norm per vector also divides each scored pair
+    assigned = ivf_assign(vecs, cents, "id", "vec")
     w = Window.partitionBy("cell").orderBy("id")
     ranked = assigned.withColumn("rk", F.row_number().over(w))
     early = ranked.filter(F.col("rk") <= cap).select(
         F.col("cell").alias("bcell"),
         F.col("id").alias("bid"),
         F.col("vec").alias("bvec"),
-        F.col("nv").alias("bnv"),
+        F.col("_nv").alias("bnv"),
     )
     probe = ranked
     try:
@@ -771,20 +785,17 @@ def semdedup(
         # the paper's operating point K ≫ cores, so this branch is off
         # and no extra shuffle is paid.
         probe = ranked.repartition("id")
-    score = pair_cosine(F.col("vec"), F.col("bvec"), F.col("nv"), F.col("bnv"), dim)
-    pairs = (
-        probe.join(
-            early, (F.col("cell") == F.col("bcell")) & (F.col("bid") < F.col("id"))
-        )
-        .withColumn("s", F.round(score, 4))
-        .filter(F.col("s") >= tau)
-    )
-    dups = pairs.groupBy("id").agg(
-        F.min("bid").alias("dup_of"), F.max("s").alias("max_sim")
-    )
+    score = pair_cosine(F.col("vec"), F.col("bvec"), F.col("_nv"), F.col("bnv"), dim)
+    pairs = probe.join(
+        early, (F.col("cell") == F.col("bcell")) & (F.col("bid") < F.col("id")), "left"
+    ).withColumn("s", F.round(score, 4))
+    dup = F.col("s") >= tau
     return (
-        assigned.select("id", "cell")
-        .join(dups, "id", "left")
+        pairs.groupBy("id", "cell")
+        .agg(
+            F.min(F.when(dup, F.col("bid"))).alias("dup_of"),
+            F.max(F.when(dup, F.col("s"))).alias("max_sim"),
+        )
         .select(
             F.col("id").alias(id_col),
             F.col("cell").cast("int").alias("cell"),

@@ -10,19 +10,20 @@ Batch-Spark design (SURVEY §7.4):
 - the input is split into P deterministic buckets:
   ``bucket = pmod(xxhash64(url), P)`` — stable across runs and cluster
   sizes (the fingerprint analogue);
-- after a bucket's sink write commits, one ledger row
-  ``(bucket, stage, rows, ts)`` is appended (parquet append — each
-  commit is its own file, so a crash mid-append leaves either a
-  complete row-group or nothing); ``runner.run`` is the loop that
-  writes one bucket per job and commits the row count it observed on
-  that write;
-- on restart, committed buckets are read back and only the remaining
-  buckets are written;
+- ``runner.run`` writes every pending bucket in one job and then
+  appends one ledger row ``(bucket, stage, rows, ts)`` per bucket, all
+  in one parquet file (``commit_buckets``): a crash mid-append leaves
+  either the whole file or nothing; ``rows`` is the count observed on
+  the write, so committing reads nothing back;
+- on restart, committed buckets are read back (``committed_buckets``)
+  and only the remaining buckets are written;
 - sink writes are idempotent per bucket (dynamic partition overwrite on
-  the bucket column), so a bucket killed mid-write is safely rewritten.
+  the bucket column), so a bucket written but not committed is safely
+  rewritten.
 
-Lineage/metrics: ``stage_metrics`` records rows in/out/errors per stage
-per bucket — the obsreport analogue (adapter/receiver.go:55-66).
+The per-bucket counts the reference's obsreport keeps (accepted,
+refused, dropped — adapter/receiver.go:55-66) are the runner's OTLP
+telemetry records, not a table here.
 """
 
 from __future__ import annotations
@@ -62,39 +63,23 @@ def with_bucket(df: DataFrame, key: str = "url", n_buckets: int = 16) -> DataFra
     return df.withColumn("bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int"))
 
 
-def committed_buckets(spark: SparkSession, ledger_path: str, stage: str) -> set[int]:
+def committed_buckets(spark: SparkSession, ledger_path: str, stage: str) -> dict[int, int]:
+    """``{bucket: rows}`` of the stage's committed buckets; a bucket
+    committed more than once (a run without resume) keeps its newest row."""
     if not os.path.exists(ledger_path):
-        return set()
-    df = spark.read.schema(LEDGER_SCHEMA).parquet(ledger_path)
-    return {
-        r["bucket"] for r in df.filter(F.col("stage") == stage).select("bucket").distinct().collect()
-    }
+        return {}
+    rows = (
+        spark.read.schema(LEDGER_SCHEMA).parquet(ledger_path)
+        .filter(F.col("stage") == stage)
+        .select("bucket", "rows", "committed_at")
+        .collect()
+    )
+    return {r["bucket"]: r["rows"] for r in sorted(rows, key=lambda r: r["committed_at"])}
 
 
-def commit_bucket(
-    spark: SparkSession, ledger_path: str, bucket: int, stage: str, rows: int
-) -> None:
+def commit_buckets(spark: SparkSession, ledger_path: str, stage: str, rows: dict[int, int]) -> None:
+    """One ledger row per ``{bucket: rows}`` entry, appended as one file."""
+    now = time.time()
     local_frame(
-        spark, [(bucket, stage, rows, time.time())], LEDGER_SCHEMA
+        spark, [(b, stage, n, now) for b, n in rows.items()], LEDGER_SCHEMA
     ).coalesce(1).write.mode("append").parquet(ledger_path)
-
-
-def stage_metrics(frames: dict[str, DataFrame]) -> DataFrame:
-    """Lineage table: rows in/out/``_error`` rows per stage and partition
-    bucket (the obsreport analogue, per-partition as the north rule
-    requires; frames lacking a bucket column report as bucket -1)."""
-    out = None
-    for stage, df in frames.items():
-        has_err = "_error" in df.columns
-        if "bucket" in df.columns:
-            grouped = df.groupBy(F.col("bucket"))
-        else:
-            grouped = df.groupBy(F.lit(-1).alias("bucket"))
-        m = grouped.agg(
-            F.count(F.lit(1)).alias("rows"),
-            (
-                F.sum(F.col("_error").cast("int")) if has_err else F.lit(0)
-            ).alias("errors"),
-        ).withColumn("stage", F.lit(stage))
-        out = m if out is None else out.unionByName(m)
-    return out.select("stage", "bucket", "rows", "errors")

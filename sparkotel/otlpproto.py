@@ -19,10 +19,11 @@ Field numbers / wire types come from the PUBLIC opentelemetry-proto
 definitions (opentelemetry/proto/logs/v1/logs.proto,
 common/v1/common.proto, resource/v1/resource.proto).  No protobuf
 runtime exists in this environment, so the encoder/decoder is a
-hand-rolled proto3 wire-format implementation of exactly the subset
-the engine's flat rows carry (string-valued attributes, string log
-body) — zero-valued scalars are omitted like every conforming proto3
-encoder, including pdata's.
+hand-rolled proto3 wire-format implementation.  The encoder writes
+exactly the subset the engine's flat rows carry (string-valued
+attributes, string log body) — zero-valued scalars are omitted like
+every conforming proto3 encoder, including pdata's; the decoder reads
+every scalar AnyValue arm as the string the JSON arm gives it.
 
 Spark-first shape: one ``{Logs,Traces,Metrics}Data`` message per
 RESOURCE IDENTITY — the same batchperresourceattr grouping contract as
@@ -36,8 +37,11 @@ expression (``unhex(lpad(hex(octet_length(msg)), 8, '0'))`` is the
 
 from __future__ import annotations
 
+import base64
 import itertools
+import math
 import struct
+from decimal import Decimal
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -346,10 +350,34 @@ def _fields(b: bytes):
         yield fnum, wire, v
 
 
+def _double_str(x: float) -> str:
+    """Spark's double → string (Java ``Double.toString``) from Python's
+    shortest repr: plain in [1e-3, 1e7), else ``d.dddEn``.  JDK 17's
+    digits are not always the shortest (2**60 prints
+    1.15292150460684698E18, the smallest subnormal 4.9E-324); those
+    doubles differ in their last digits."""
+    if not math.isfinite(x) or x == 0 or 1e-3 <= abs(x) < 1e7:
+        return {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}.get(repr(x), repr(x))
+    _, digits, exp = Decimal(repr(abs(x))).as_tuple()
+    ds = "".join(map(str, digits)).rstrip("0")
+    return f"{'-' if x < 0 else ''}{ds[0]}.{ds[1:] or '0'}E{len(digits) + exp - 1}"
+
+
 def _dec_anyvalue(b: bytes) -> str:
+    """AnyValue → the string the JSON arm's ``_any_as_string`` (pcommon
+    AsString) gives: string (1), bool (2), int64 (3), double (4), bytes
+    (7, base64); an array (5), kvlist (6) or empty value gives ``""``."""
     for f, _, v in _fields(b):
         if f == 1:
             return v.decode("utf-8")
+        if f == 2:
+            return "true" if v else "false"
+        if f == 3:
+            return str(v - (1 << 64) if v >= 1 << 63 else v)
+        if f == 4:
+            return _double_str(_dbl(v))
+        if f == 7:
+            return base64.b64encode(v).decode("ascii")
     return ""
 
 
@@ -626,7 +654,7 @@ def parse_otlp_proto_traces(df: DataFrame, frame_col: str = "frame") -> DataFram
 # opentelemetry/proto/metrics/v1/metrics.proto)
 # ---------------------------------------------------------------------------
 
-_METRICS_FLAT_DDL = (
+METRICS_FLAT_DDL = (
     "metric_name string, unit string, metric_type string, "
     "aggregation_temporality int, is_monotonic boolean, "
     "start_ts timestamp_ntz, ts timestamp_ntz, value double, "
@@ -730,7 +758,7 @@ def parse_otlp_proto_metrics(df: DataFrame, frame_col: str = "frame") -> DataFra
     proto twin of ``parse_otlp_metrics`` (identical output schema)."""
     return df.mapInPandas(
         _framed_decoder(frame_col, decode_metrics_data, _METRICS_ZERO),
-        _METRICS_FLAT_DDL,
+        METRICS_FLAT_DDL,
     )
 
 

@@ -681,7 +681,7 @@ _OTLP_ORACLE_SQL = """SELECT ts,
   CASE event_type WHEN 'error' THEN 'ERROR' WHEN 'purchase' THEN 'INFO' ELSE 'DEBUG' END AS severity_text,
   'evt ' || event_type || ' ' || CAST(event_id AS VARCHAR) AS body,
   event_type AS attr_event_type,
-  json_extract_string(props, '$.k') AS attr_k,
+  json_extract_string(CASE WHEN json_valid(props) THEN props END, '$.k') AS attr_k,
   'svc-' || CAST(user_id % 5 AS VARCHAR) AS service_name,
   'host-' || CAST(user_id % 7 AS VARCHAR) AS host_name,
   'gen' AS scope_name, '1' AS scope_version,
@@ -1017,8 +1017,8 @@ FROM events""",
   CASE WHEN event_type = 'purchase' THEN ts - INTERVAL 1 SECOND END AS start_ts,
   ts,
   CASE WHEN event_type = 'purchase'
-       THEN CAST(json_extract_string(props, '$.k') AS DOUBLE) ELSE value END AS value,
-  json_extract_string(props, '$.k') AS attr_k,
+       THEN CAST(json_extract_string(CASE WHEN json_valid(props) THEN props END, '$.k') AS DOUBLE) ELSE value END AS value,
+  json_extract_string(CASE WHEN json_valid(props) THEN props END, '$.k') AS attr_k,
   'host-' || CAST(user_id % 7 AS VARCHAR) AS host_name,
   'meter' AS scope_name
 FROM events""",
@@ -1516,9 +1516,9 @@ FROM events""",
         dp_transform_q,
         """SELECT 'm.' || event_type AS metric_name, 'us' AS unit,
   CASE WHEN event_type = 'purchase'
-       THEN CAST(json_extract_string(props, '$.k') AS DOUBLE)
+       THEN CAST(json_extract_string(CASE WHEN json_valid(props) THEN props END, '$.k') AS DOUBLE)
        ELSE value END * 1000 AS value,
-  json_extract_string(props, '$.k') AS attr_k,
+  json_extract_string(CASE WHEN json_valid(props) THEN props END, '$.k') AS attr_k,
   CASE WHEN event_type = 'purchase' THEN 'sum' ELSE 'gauge' END AS mtype,
   CASE WHEN event_type = 'purchase' THEN 'true' END AS cumulative_sum,
   'host-' || CAST(user_id % 7 AS VARCHAR) AS host_name
@@ -1554,9 +1554,9 @@ FROM events""",
     CAST(CASE WHEN event_type = 'purchase' THEN 2 ELSE 1 END AS INT) AS aggregation_temporality,
     TRUE AS is_monotonic, ts,
     (CASE WHEN event_type = 'purchase'
-          THEN CAST(json_extract_string(props, '$.k') AS DOUBLE)
+          THEN CAST(json_extract_string(CASE WHEN json_valid(props) THEN props END, '$.k') AS DOUBLE)
           ELSE value END) * 2 AS value,
-    json_extract_string(props, '$.k') AS attr_k
+    json_extract_string(CASE WHEN json_valid(props) THEN props END, '$.k') AS attr_k
   FROM events)
 SELECT * FROM base
 UNION ALL
@@ -1587,9 +1587,9 @@ FROM base WHERE metric_name = 'm.error'""",
   event_type = 'purchase' AS is_monotonic,
   ts,
   avg(CASE WHEN event_type = 'purchase'
-      THEN CAST(json_extract_string(props, '$.k') AS DOUBLE)
+      THEN CAST(json_extract_string(CASE WHEN json_valid(props) THEN props END, '$.k') AS DOUBLE)
       ELSE value END) AS value,
-  json_extract_string(props, '$.k') AS attr_k,
+  json_extract_string(CASE WHEN json_valid(props) THEN props END, '$.k') AS attr_k,
   'host-' || CAST(user_id % 7 AS VARCHAR) AS host_name
 FROM events GROUP BY 1, 2, 3, 4, 5, 6, 8, 9""",
     )
@@ -2449,7 +2449,7 @@ def _add_spanproc_queries(q: dict[str, Query]) -> None:
         """SELECT CASE WHEN event_type = 'purchase' THEN 'metrics'
             WHEN event_type = 'error' THEN 'traces' ELSE 'logs' END AS signal,
   CASE WHEN event_type = 'purchase'
-         THEN 'm.' || json_extract_string(props, '$.k')
+         THEN 'm.' || json_extract_string(CASE WHEN json_valid(props) THEN props END, '$.k')
        WHEN event_type = 'error' THEN md5('t' || CAST(event_id AS VARCHAR))
        ELSE 'evt ' || CAST(event_id AS VARCHAR) END AS ident
 FROM events WHERE event_type <> 'signup'""",
@@ -2562,9 +2562,9 @@ FROM events""",
   CASE WHEN event_type = 'purchase' THEN 'Cumulative' END AS temporality,
   CASE WHEN event_type <> 'purchase' THEN CAST(value AS VARCHAR) END AS gauge_value,
   CASE WHEN event_type = 'purchase'
-       THEN CAST(CAST(json_extract_string(props, '$.k') AS DOUBLE) AS VARCHAR)
+       THEN CAST(CAST(json_extract_string(CASE WHEN json_valid(props) THEN props END, '$.k') AS DOUBLE) AS VARCHAR)
   END AS sum_value,
-  json_extract_string(props, '$.k') AS attr_k,
+  json_extract_string(CASE WHEN json_valid(props) THEN props END, '$.k') AS attr_k,
   'host-' || CAST(user_id % 7 AS VARCHAR) AS host_name,
   'meter' AS scope_name
 FROM events""",
@@ -2727,7 +2727,7 @@ _STATUS_SQL = (
     "CASE event_type WHEN 'error' THEN 'STATUS_CODE_ERROR'"
     " WHEN 'purchase' THEN 'STATUS_CODE_OK' ELSE 'STATUS_CODE_UNSET' END"
 )
-_K_SQL = "CAST(json_extract(props, '$.k') AS BIGINT)"
+_K_SQL = "CAST(json_extract(CASE WHEN json_valid(props) THEN props END, '$.k') AS BIGINT)"
 
 
 def _conn_trace_lines(spark, sf):
@@ -3609,7 +3609,8 @@ SELECT key FROM b WHERE (h % 16384) < 4096""",
 
     q["json_parser"] = Query(
         jsonp,
-        "SELECT event_id, CAST(json_extract(props, '$.k') AS INT) AS k FROM events",
+        "SELECT event_id, CAST(json_extract(CASE WHEN json_valid(props) THEN props END, '$.k')"
+        " AS INT) AS k FROM events",
     )
 
     # --- csv / key_value parsers over a synthesized line ---------------------

@@ -1,7 +1,7 @@
 """Spec-driven pipeline runner — the spark-submit entry point's core.
 
 Composes the whole parse → enrich → filter/transform → route → sink
-(+metrics, +lineage) job from a PipelineSpec, with ledger-based
+(+metrics, +telemetry) job from a PipelineSpec, with ledger-based
 resumability: buckets already committed by a previous (killed) run are
 skipped, sink writes are idempotent per bucket.
 
@@ -10,17 +10,26 @@ Usage (cluster):
         --spec tests/fixtures/pipeline_m1.json \
         --input /data/pages --output /data/out
 
-Each pending bucket is one write job (scan → codegen'd parse/enrich
-projections → broadcast joins → first-match route → bucket filter) into
-the bucket+route-partitioned sink, and its row count is observed on
-that write, so committing it runs no second job.  The bucket is a hash
-of the url, which the scan cannot prune on, so a run with n pending
-buckets reads the input n + 1 times: once per bucket, and once more
-for the lineage ``source`` row (``L.stage_metrics``).  Aggregates
-re-read the pruned columns of the materialized sink table.
+A run reads its input once: ONE write job (scan → bucket filter →
+codegen'd parse/enrich projections → broadcast joins → first-match
+route) writes every pending bucket into the bucket+route-partitioned
+sink with dynamic overwrite.  Two observations on that job count each
+bucket's records where they pass: received before the pipeline, and
+routed, ``_error`` and per-route rows after it.  Each bucket then
+commits those rows to the ledger, and its counts go to
+``{output}/_telemetry/`` as one OTLP metrics request (the obsreport
+analogue, adapter/receiver.go:55-66).  Aggregates re-read the pruned
+columns of the materialized sink table.
+
+Trade-off: a kill during the job loses all of its buckets, where a job
+per bucket lost one.  As with the reference fileconsumer's per-file
+checkpoint, a bucket commits only after its write, and a bucket written
+but not committed is rewritten by the next run.
 """
 
 from __future__ import annotations
+
+from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +43,9 @@ from sparkotel.operators import parse as PR
 from sparkotel.operators.aggregate import MetricDef, connector_metric
 from sparkotel.operators.filter import filter_drop
 from sparkotel.operators.route import Route, assign_routes
+from sparkotel.otlpjson import to_otlp_metrics_json
+from sparkotel.otlpproto import METRICS_FLAT_DDL
+from sparkotel.session import local_frame
 
 
 def _lookup_table(spark: SparkSession, name: str) -> DataFrame:
@@ -70,6 +82,21 @@ def build_routed(spark: SparkSession, src: DataFrame, spec: PipelineSpec) -> Dat
     return assign_routes(df, routes, spec.default_sink)
 
 
+def _telemetry_rows(buckets, received: dict, routed: dict, routes: list[str], t0, t1):
+    """Each bucket's counts from the write's two observations as flat
+    NUMBER-point rows (``otlpjson.parse_otlp_metrics`` shape), one delta
+    sum per count; each bucket is its own resource."""
+    for b in buckets:
+        res = {"service.name": "sparkotel.runner", "bucket": str(b)}
+        n_in = received[f"{b}.received"]
+        points = [("received", {}, n_in), ("errors", {}, routed[f"{b}.errors"]),
+                  ("dropped", {}, n_in - routed[f"{b}.rows"])]
+        points += [("routed", {"route": r}, routed[f"{b}.route.{r}"]) for r in routes]
+        for name, attrs, v in points:
+            yield (f"sparkotel.runner.{name}", "{record}", "sum", 1, True,
+                   t0, t1, float(v), attrs, res, "sparkotel.runner")
+
+
 def run(
     spark: SparkSession,
     src: DataFrame,
@@ -80,33 +107,52 @@ def run(
 ) -> dict:
     """Execute the pipeline with ledger resumability.
 
+    ``fail_after`` is the kill hook: commit at most that many of the
+    written buckets, then return as a killed run would.
+
     Writes:
       {output}/routed/            bucket+route-partitioned records
       {output}/metrics/           per-sink count/sum-connector tables
-      {output}/lineage/           stage metrics (obsreport analogue)
+      {output}/_telemetry/        per-bucket OTLP/JSON record counts
       {output}/_ledger/           commit log
     Returns summary counts.
     """
-    routed = build_routed(spark, src, spec)
     ledger_path = f"{output}/_ledger"
-
-    routed = L.with_bucket(routed, key="url", n_buckets=spec.n_buckets)
-    done = L.committed_buckets(spark, ledger_path, "routed") if resume else set()
+    done = L.committed_buckets(spark, ledger_path, "routed") if resume else {}
     todo = [b for b in range(spec.n_buckets) if b not in done]
-    committed = 0
-    for b in todo:
-        obs = Observation()
-        part = routed.filter(F.col("bucket") == b).observe(obs, F.count(F.lit(1)).alias("rows"))
+    # the values the route column takes: move sinks, then the default
+    moves = [r.sink for r in spec.routes if r.mode == "move"]
+    routes = list(dict.fromkeys(moves + [spec.default_sink]))
+    new: dict[int, int] = {}
+    if todo:
+        t0 = datetime.now(timezone.utc)  # UTC wall time, as timestamp_ntz holds it
+        on_b = {b: F.col("bucket") == b for b in todo}
+        received = [F.count_if(c).alias(f"{b}.received") for b, c in on_b.items()]
+        passed = {}
+        for b, c in on_b.items():
+            passed[f"{b}.rows"] = c
+            passed[f"{b}.errors"] = c & F.col("_error")
+            passed.update({f"{b}.route.{r}": c & (F.col("route") == r) for r in routes})
+        obs_in, obs_out = Observation(), Observation()
+        pending = L.with_bucket(src, "url", spec.n_buckets).filter(F.col("bucket").isin(todo))
+        routed = build_routed(spark, pending.observe(obs_in, *received), spec).observe(
+            obs_out, *[F.count_if(c).alias(k) for k, c in passed.items()]
+        )
         (
-            part.write.mode("overwrite")
+            routed.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("bucket", "route")
             .parquet(f"{output}/routed")
         )
-        L.commit_bucket(spark, ledger_path, b, "routed", obs.get["rows"])
-        committed += 1
-        if fail_after is not None and committed >= fail_after:
-            return {"committed": committed, "resumed_from": len(done), "complete": False}
+        commit, got = todo[:fail_after], obs_out.get
+        new = {b: got[f"{b}.rows"] for b in commit}
+        L.commit_buckets(spark, ledger_path, "routed", new)
+        rows = _telemetry_rows(commit, obs_in.get, got, routes, t0, datetime.now(timezone.utc))
+        # one partition: the marshal's three groupBys then need no shuffle
+        telemetry = local_frame(spark, list(rows), METRICS_FLAT_DDL).coalesce(1)
+        to_otlp_metrics_json(telemetry).write.mode("append").text(f"{output}/_telemetry")
+    if fail_after is not None:
+        return {"committed": len(new), "resumed_from": len(done), "complete": False}
 
     back = spark.read.parquet(f"{output}/routed")
     # copy-mode routes see the full stream (plogutil copy semantics)
@@ -130,11 +176,9 @@ def run(
             u = u.unionByName(a, allowMissingColumns=True)
         u.write.mode("overwrite").parquet(f"{output}/metrics")
 
-    lineage = L.stage_metrics({"source": src, "routed": back})
-    lineage.write.mode("overwrite").parquet(f"{output}/lineage")
     return {
-        "committed": committed,
+        "committed": len(new),
         "resumed_from": len(done),
         "complete": True,
-        "rows": back.count(),
+        "rows": sum({**done, **new}.values()),
     }

@@ -36,8 +36,8 @@ def test_local_frame_keeps_types_on_empty_and_null(spark):
 
 
 def _commit_bucket(spark, tmp_path):
-    L.commit_bucket(spark, str(tmp_path / "ledger"), 3, "sink", 7)
-    assert L.committed_buckets(spark, str(tmp_path / "ledger"), "sink") == {3}
+    L.commit_buckets(spark, str(tmp_path / "ledger"), "sink", {3: 7})
+    assert L.committed_buckets(spark, str(tmp_path / "ledger"), "sink") == {3: 7}
 
 
 def _dynsample(spark, tmp_path):

@@ -5,6 +5,8 @@ This is the same comparison the harness runs at sf0.01."""
 
 from __future__ import annotations
 
+import re
+
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -12,7 +14,7 @@ import pytest
 from conftest import SF_DIR
 
 from sparkotel import pages as P
-from sparkotel.parity import duck_rows, spark_rows
+from sparkotel.parity import duck_con, duck_rows, spark_rows
 from sparkotel.registry import build_registry
 
 REG = build_registry()
@@ -61,3 +63,29 @@ def test_embedding_prep_matches_oracle_on_degenerate_vectors(spark, tmp_path):
     assert got == duck_rows(con, q.oracle)
     # columns sorted by name: e0 first, vec_id sixth
     assert {r[5]: r[0] for r in got} == {0: None, 1: None, 2: None, 3: 0.6}
+
+
+_PROPS_ORACLES = [n for n, q in REG.items() if q.oracle and "json_valid(props)" in q.oracle]
+
+
+def test_every_props_json_read_is_guarded():
+    """An oracle reads ``events.props`` as JSON only through
+    ``json_valid``: DuckDB's ``json_extract*`` raise on malformed JSON,
+    where Spark's ``get_json_object``/``from_json`` give NULL."""
+    bare = [
+        n for n, q in REG.items() if q.oracle and re.search(r"json_extract\w*\(props", q.oracle)
+    ]
+    assert bare == [] and _PROPS_ORACLES
+
+
+@pytest.mark.parametrize("name", _PROPS_ORACLES)
+def test_props_oracle_survives_empty_props(name):
+    """One ``''``-props events row is NULL JSON to the oracle, not an
+    exception."""
+    con = duck_con(SF_DIR)
+    con.sql(
+        f"CREATE OR REPLACE VIEW events AS SELECT * FROM '{SF_DIR}/events.parquet' UNION ALL"
+        f" (SELECT * REPLACE ('' AS props) FROM '{SF_DIR}/events.parquet' LIMIT 1)"
+    )
+    assert con.sql("SELECT count(*) FROM events WHERE props = ''").fetchone() == (1,)
+    duck_rows(con, REG[name].oracle)

@@ -685,3 +685,41 @@ def test_marshal_bytes_pinned(spark, signal):
             ("aa" * 16, 106, 1710500405000000),
             ("ab" * 16, 143, 1710496801000000),
         ]
+
+
+# AnyValue arms (common.proto): (key, proto arm bytes, JSON value, AsString)
+_ANY_ARMS = [
+    ("k", b"\x18\x2a", {"intValue": "42"}, "42"),
+    ("n", b"\x18" + b"\xf9" + b"\xff" * 8 + b"\x01", {"intValue": "-7"}, "-7"),
+    ("t", b"\x10\x01", {"boolValue": True}, "true"),
+    ("f", b"\x10\x00", {"boolValue": False}, "false"),
+    ("x", b"\x3a\x04\x00\xffhi", {"bytesValue": "AP9oaQ=="}, "AP9oaQ=="),
+    ("d", b"\x21" + struct.pack("<d", 1.5), {"doubleValue": 1.5}, "1.5"),
+    ("e", b"\x21" + struct.pack("<d", 1e20), {"doubleValue": 1e20}, "1.0E20"),
+    ("s", b"\x21" + struct.pack("<d", 1.2345e-5), {"doubleValue": 1.2345e-5}, "1.2345E-5"),
+    ("a", b"\x2a\x00", {"arrayValue": {}}, ""),
+]
+
+
+def test_anyvalue_scalar_arms_decode_like_json(spark):
+    """Every scalar AnyValue arm decodes to the string the JSON arm's
+    pcommon AsString gives: int64 as signed decimal, bool as
+    true/false, double as Spark's double-to-string, bytes as base64."""
+    import json
+
+    from sparkotel.otlpjson import parse_otlp_logs
+    from sparkotel.otlpproto import _dec_kvs
+
+    expected = {k: s for k, _, _, s in _ANY_ARMS}
+    kvs = [
+        b"\x0a\x01" + k.encode() + b"\x12" + bytes([len(arm)]) + arm
+        for k, arm, _, _ in _ANY_ARMS
+    ]
+    assert _dec_kvs(kvs[:1]) == {"k": "42"}
+    assert _dec_kvs(kvs) == expected
+    attrs = [{"key": k, "value": v} for k, _, v, _ in _ANY_ARMS]
+    line = json.dumps(
+        {"resourceLogs": [{"scopeLogs": [{"logRecords": [{"attributes": attrs}]}]}]}
+    )
+    df = spark.createDataFrame([(line,)], "line string")
+    assert parse_otlp_logs(df).first()["attributes"] == expected

@@ -3,14 +3,17 @@
 from __future__ import annotations
 
 import os
-from dataclasses import replace
+import re
 from urllib.parse import urlparse
 
 from conftest import SF_DIR
+from pyspark.sql import functions as F
 
 from sparkotel import ledger as L
 from sparkotel import pages as P
 from sparkotel.config import PipelineSpec
+from sparkotel.operators.aggregate import MetricDef, connector_metric
+from sparkotel.otlpjson import parse_otlp_metrics
 from sparkotel.registry import _verdict_rounds, build_registry, stalest_first
 from sparkotel.runner import run
 
@@ -62,48 +65,72 @@ def test_runner_kill_resume(spark, tmp_path):
         "geo_country = 'DE'"
     ).count()
 
-    # lineage table: per-partition rows for the routed stage (north
-    # rule: per-partition lineage), one global row for the source
-    lin = spark.read.parquet(f"{out}/lineage").collect()
-    routed_rows = [r for r in lin if r["stage"] == "routed"]
-    src_rows = [r for r in lin if r["stage"] == "source"]
-    assert len(routed_rows) == spec.n_buckets
-    assert sum(r["rows"] for r in routed_rows) == sum(r["rows"] for r in src_rows)
-    assert sum(r["errors"] for r in routed_rows) > 0
+    # telemetry: one OTLP metrics request per committed bucket (its
+    # resource), read back through the receiver and summed by the count
+    # connector; received == routed, errors counted, and the routed
+    # totals per bucket are the ledger's rows
+    lines = spark.read.text(f"{out}/_telemetry")
+    assert lines.count() == spec.n_buckets
+    points = parse_otlp_metrics(lines, "value").select(
+        F.substring_index("metric_name", ".", -1).alias("count"),
+        F.col("resource")["bucket"].cast("int").alias("bucket"),
+        "value",
+        "ts",
+    )
+    sums = connector_metric(
+        points, MetricDef("sum", (), ("count", "bucket"), {}, "value"), ts_col="ts"
+    ).collect()
+    tel = {(r["count"], r["bucket"]): r["value"] for r in sums}
+    routed_tel = {b: v for (m, b), v in tel.items() if m == "routed"}
+    assert len(routed_tel) == spec.n_buckets
+    total = {m: sum(v for (mm, _), v in tel.items() if mm == m) for m in ("received", "routed")}
+    assert total["received"] == total["routed"] == s2["rows"]
+    assert sum(v for (m, _), v in tel.items() if m == "errors") > 0
 
     # transform statement applied (host_hash only on parsed rows)
     ok = routed.filter("NOT _error").limit(5).collect()
     assert all(len(r["host_hash"]) == 64 for r in ok)
 
-    # the ledger's `rows` is each bucket's own count, as written
+    # the ledger's `rows` is each bucket's own count, as written, and
+    # what the telemetry reports
     ledger_rows = {
         r["bucket"]: r["rows"]
         for r in spark.read.schema(L.LEDGER_SCHEMA).parquet(f"{out}/_ledger").collect()
     }
     written = {r["bucket"]: r["count"] for r in routed.groupBy("bucket").count().collect()}
     assert ledger_rows == {b: written.get(b, 0) for b in range(spec.n_buckets)}
+    assert {b: int(v) for b, v in routed_tel.items()} == ledger_rows
 
 
-def test_runner_never_counts_its_source(spark, tmp_path, monkeypatch):
-    """Each bucket's ledger rows come from its own write: every frame
-    the runner counts reads files it wrote, never the input pages."""
-    spec = replace(PipelineSpec.from_json(FIXTURE), n_buckets=2)
+def _final_plan_scans(desc: str, path: str) -> int:
+    """Scans of ``path`` in a physical plan description; under AQE only
+    those of its final plan (the initial plan lists each scan again)."""
+    tree, _, details = desc.partition("\n\n(")
+    ids = re.findall(r"Scan parquet\s+\((\d+)\)", tree.split("== Initial Plan ==")[0])
+    blocks = {b.split(")", 1)[0]: b for b in details.split("\n\n(")}
+    return sum(f"Location: InMemoryFileIndex [file:{path}]" in blocks.get(i, "") for i in ids)
+
+
+def test_runner_reads_its_source_once(spark, tmp_path):
+    """A complete run scans the input once: the one write job counts
+    every bucket as it passes, so no commit, metric or telemetry record
+    reads the input again."""
+    spec = PipelineSpec.from_json(FIXTURE)
     src = P.pages(spark, SF_DIR).drop("html")
-    out = str(tmp_path / "out")
-    cls = type(src)
-    counted = []
-    real_count = cls.count
+    (path,) = {urlparse(f).path for f in src.inputFiles()}
+    store = spark._jsparkSession.sharedState().statusStore()
 
-    def spy(df):
-        counted.append(df.inputFiles())
-        return real_count(df)
+    def executions() -> list[int]:
+        ex = store.executionsList()
+        return [ex.apply(i).executionId() for i in range(ex.size())]
 
-    monkeypatch.setattr(cls, "count", spy)
-    assert run(spark, src, spec, out)["complete"]
-    monkeypatch.undo()
-
-    files = [urlparse(f).path for fs in counted for f in fs]
-    assert files and all(f.startswith(out + "/") for f in files), files
+    before = set(executions())
+    assert run(spark, src, spec, str(tmp_path / "out"))["complete"]
+    descs = [
+        store.execution(e).get().physicalPlanDescription()
+        for e in executions() if e not in before
+    ]
+    assert sum(_final_plan_scans(d, path) for d in descs) == 1
 
 
 def test_correctness_window_is_oracle_checked():

@@ -29,16 +29,17 @@ def test_bucket_stability(spark):
     assert a == b
 
 
-def test_stage_metrics(spark):
+def test_parse_keeps_every_row(spark):
+    """on_error=send: the parse stage keeps each source row and marks
+    the ~3% malformed ones with ``_error``."""
     from sparkotel import pipeline as PL
 
     out = PL.build(spark, SF_DIR)
-    m = {r["stage"]: r for r in L.stage_metrics(
-        {"source": out["source"], "parsed": out["parsed"]}
-    ).collect()}
-    assert m["source"]["rows"] == m["parsed"]["rows"]
-    assert m["parsed"]["errors"] > 0  # the ~3% malformed rows
-    assert m["source"]["errors"] == 0
+    parsed = out["parsed"].agg(
+        F.count(F.lit(1)).alias("rows"), F.count_if("_error").alias("errors")
+    ).first()
+    assert parsed["rows"] == out["source"].count()
+    assert parsed["errors"] > 0
 
 
 # -- skew ---------------------------------------------------------------------
